@@ -7,12 +7,14 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this file's own checkout, never another one on the machine
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import math  # noqa: E402
 

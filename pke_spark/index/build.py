@@ -131,6 +131,31 @@ def docmap_path(postings_dir: str) -> str:
     return f"{postings_dir}_docmap"
 
 
+def load_docmap(con, postings_dir: str):
+    """The dense doc-ordinal map of ``postings_dir`` as ONE int64
+    doc_id array indexed by ordinal, read on the DuckDB connection
+    ``con`` — the driver's only reader of the docmap files. The build
+    writes the map ord-sorted with ordinals 0..n-1 assigned in
+    ascending doc_id order; a map that breaks either invariant (lost,
+    duplicated or reordered ordinals, doc_ids out of order) raises
+    RuntimeError instead of translating to wrong doc_ids."""
+    import numpy as np
+    dm = docmap_path(postings_dir)
+    got = con.execute(f"SELECT ord, doc_id FROM "
+                      f"read_parquet('{dm}/*.parquet')").fetchnumpy()
+    ords = np.asarray(got["ord"], dtype=np.int64)
+    ids = np.ascontiguousarray(got["doc_id"], dtype=np.int64)
+    if not np.array_equal(ords, np.arange(len(ords), dtype=np.int64)):
+        raise RuntimeError(
+            f"docmap {dm}: ordinals are not exactly 0..{len(ords) - 1} "
+            "— refusing to serve possibly-mistranslated doc_ids")
+    if len(ids) > 1 and not bool(np.all(ids[1:] > ids[:-1])):
+        raise RuntimeError(
+            f"docmap {dm}: doc_ids are not strictly ascending in ordinal "
+            "order — refusing to serve possibly-mistranslated doc_ids")
+    return ids
+
+
 def swap_postings(index_dir: str, new_name: str) -> None:
     """Atomically point the index at ``index_dir/new_name`` and then
     best-effort delete the previous postings directory."""
@@ -969,8 +994,8 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
         # random xxhash64 ids — deltas shrink from ~2^57 (8-9 varint
         # bytes) to ~n/df (1-2 bytes). The (ord, doc_id) map is written
         # next to the postings (docmap_path) and the top-k edge
-        # translates back; the map is ord-sorted so a k-row lookup is a
-        # predicate-pushdown point read. B1 remaps doc_id -> ord BEFORE
+        # translates back through the reader's resident copy of the map
+        # (IndexReader.resolve_ords). B1 remaps doc_id -> ord BEFORE
         # encoding (the map rides a broadcast as two sorted numpy
         # arrays; ordinals are assigned in doc_id order, so doc-sorted
         # chunks stay ord-sorted).
@@ -989,9 +1014,8 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
         # Arrow collect of the one-row-per-doc length table — the same
         # bytes the broadcast ships right after. Sorting the ids IS the
         # ordinal assignment (ordinals are dense 0..n-1 in doc_id
-        # order), and the map is written ord-sorted in bounded row
-        # groups so resolve_ords' point reads keep their min/max
-        # row-group pruning.
+        # order). The map is written ord-sorted, which is the layout
+        # load_docmap validates and serves as one array.
         import shutil
 
         import numpy as np
@@ -1141,6 +1165,7 @@ class IndexReader:
         self._docsets = None
         self._docset_rows = 0
         self._duck = None
+        self._ord_doc_ids = None
         # tombstones resolve at construction, like the postings pointer:
         # a reader serves the live set it saw when built (cheap — a glob
         # plus a small parquet read only when deletes exist)
@@ -1150,9 +1175,21 @@ class IndexReader:
         self.n_docs = st.n_docs
         self.avgdl = st.avgdl
         self.block_size = st.block_size
-        # round-1 indexes predate the flag -> None (fall back to docmap
-        # presence without the cross-check)
-        self.stats_dense = getattr(st, "dense", None)
+        # dense: this postings dir was encoded in ordinal space (a
+        # ``<postings>_docmap`` directory travels with it). Cross-checked
+        # against the stats ``dense`` flag, which round-1 indexes predate
+        # (None: docmap presence alone decides): a dense index whose
+        # docmap was lost (partial restore/copy) raises instead of
+        # silently serving ordinals as doc_ids.
+        has_map = os.path.exists(docmap_path(self.postings_dir))
+        stats_dense = getattr(st, "dense", None)
+        if stats_dense is not None and stats_dense != has_map:
+            raise RuntimeError(
+                f"index at {index_dir}: stats says dense={stats_dense} "
+                f"but docmap {'exists' if has_map else 'is missing'} at "
+                f"{docmap_path(self.postings_dir)} — refusing to serve "
+                "possibly-mistranslated doc_ids")
+        self.dense = has_map
         # pre-profile indexes lack the column -> "code" (their builder)
         self.profile = getattr(st, "profile", None) or "code"
 
@@ -1303,12 +1340,23 @@ class IndexReader:
             self._docset_rows -= len(old)
         return arr
 
+    # DuckDB worker threads for the reader's connection. One: it serves
+    # one client's point reads, and each extra worker keeps its own
+    # allocator arenas resident — on a 6k-doc dense index (4-core
+    # host) the default four workers held driver peak RSS 16-18 MB
+    # (7-8%) above one worker, at the same warm query latency. The cost
+    # is scan parallelism on cold misses: a 2M-term dictionary point
+    # read took 69 ms on 4 threads and 203 ms on 1.
+    READER_DUCKDB_THREADS = 1
+
     def _duckdb(self):
         """One long-lived DuckDB connection per reader: per-query
         connection setup is pure overhead on the serving path."""
         if self._duck is None:
             import duckdb
             self._duck = duckdb.connect()
+            self._duck.execute(
+                f"SET threads={self.READER_DUCKDB_THREADS}")
         return self._duck
 
     def tombstones(self):
@@ -1329,37 +1377,35 @@ class IndexReader:
         # predicate pushdown on `term` prunes row groups at the scan
         return self.postings().filter(F.col("term").isin(terms))
 
-    @property
-    def dense(self) -> bool:
-        """True when this postings dir was encoded in dense ordinal
-        space (a ``<postings>_docmap`` directory travels with it).
-        Cross-checked against the stats ``dense`` flag: a dense index
-        whose docmap was lost (partial restore/copy) raises instead of
-        silently serving ordinals as doc_ids."""
-        has_map = os.path.exists(docmap_path(self.postings_dir))
-        if self.stats_dense is not None and self.stats_dense != has_map:
-            raise RuntimeError(
-                f"index at {self.index_dir}: stats says dense="
-                f"{self.stats_dense} but docmap "
-                f"{'exists' if has_map else 'is missing'} at "
-                f"{docmap_path(self.postings_dir)} — refusing to serve "
-                "possibly-mistranslated doc_ids")
-        return has_map
+    def _docmap_ids(self):
+        """The docmap as one doc_id array indexed by ordinal, loaded on
+        the first translation and kept for the reader's lifetime. Sound
+        for the same reason the LRUs are: the postings version, and the
+        docmap that travels with it, are fixed at construction. Its
+        size is the dense build's own driver-side map (bounded by
+        DENSE_BROADCAST_MAX_DOCS)."""
+        if self._ord_doc_ids is None:
+            self._ord_doc_ids = load_docmap(self._duckdb(),
+                                            self.postings_dir)
+        return self._ord_doc_ids
 
-    def resolve_ords(self, ords: list[int]) -> dict[int, int]:
-        """ord -> doc_id for EXACTLY the requested ordinals, via a
-        predicate-pushdown point read of the ord-sorted docmap (the
-        map is written in ord order, so ``WHERE ord IN (...)`` hits
-        parquet min/max row-group stats). Driver-side, k rows."""
-        if not ords:
-            return {}
-        import duckdb
-        inlist = ", ".join(str(int(o)) for o in ords)
-        rows = duckdb.connect().execute(
-            f"SELECT ord, doc_id FROM "
-            f"read_parquet('{docmap_path(self.postings_dir)}/*.parquet') "
-            f"WHERE ord IN ({inlist})").fetchall()
-        return {int(o): int(d) for o, d in rows}
+    def resolve_ords(self, ords):
+        """ord -> doc_id (int64 array, same order as ``ords``) for a
+        dense index: an array take on the resident docmap, no I/O."""
+        import numpy as np
+        return self._docmap_ids()[np.asarray(ords, dtype=np.int64)]
+
+    def ords_of(self, doc_ids):
+        """doc_id -> ord for a dense index: the sorted ordinals of the
+        ``doc_ids`` present in the docmap (unknown ids are dropped), by
+        binary search on the resident, doc_id-ascending map."""
+        import numpy as np
+        dm = self._docmap_ids()
+        ids = np.unique(np.asarray(doc_ids, dtype=np.int64))
+        pos = np.searchsorted(dm, ids)
+        hit = pos < len(dm)
+        hit[hit] = dm[pos[hit]] == ids[hit]
+        return pos[hit].astype(np.int64, copy=False)
 
     def docmap(self) -> DataFrame:
         return self.spark.read.parquet(docmap_path(self.postings_dir))

@@ -436,17 +436,15 @@ def tombstoned_doc_ids(spark: SparkSession, index_dir: str) -> np.ndarray:
     """The main index's tombstones as RAW doc ids (the sidecar stores
     raw ids, so dense indexes' ordinal-space pids are translated back
     through the docmap)."""
-    from .build import docmap_path, postings_path
+    from .build import docmap_path, load_docmap, postings_path
     from .delete import load_tombstones
     pids = load_tombstones(index_dir)
     if len(pids) == 0:
         return pids
-    dm = docmap_path(postings_path(index_dir))
-    if not os.path.exists(dm):
+    post = postings_path(index_dir)
+    if not os.path.exists(docmap_path(post)):
         return pids  # sparse index: pids ARE doc ids
-    import pyarrow.parquet as pq
-    t = pq.read_table(dm, columns=["ord", "doc_id"])
-    ords = t.column("ord").to_numpy()
-    ids = t.column("doc_id").to_numpy()
-    sel = np.isin(ords, pids)
-    return np.sort(ids[sel].astype(np.int64))
+    # pids are sorted ordinals and ordinals follow doc_id order, so the
+    # take is sorted too
+    import duckdb
+    return load_docmap(duckdb.connect(), post)[pids]

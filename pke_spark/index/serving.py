@@ -27,8 +27,9 @@ Physical shapes:
   positional blocks (a Spark job over the sidecar — the one part of a
   query that is corpus-sized in the worst case); metadata filters
   resolve to a doc-set once per query (Lucene's filter bitset), via
-  one DuckDB scan of the documents parquet joined to the docmap when
-  the index is dense.
+  one DuckDB scan of the documents parquet, translated to ordinals by
+  binary search on the reader's resident docmap when the index is
+  dense.
 - **snippets**: top-k first, then positional blocks for (query terms x
   k docs) only — the match-position table is tiny by construction.
 
@@ -215,24 +216,13 @@ def _clause_expansions(ix: IndexReader, pq: ParsedQuery,
 # ------------------------------------------------------- doc-set helpers
 
 def _docids_to_postspace(ix: IndexReader, doc_ids: np.ndarray) -> np.ndarray:
-    """Translate raw doc_ids into posting space (ordinals when the
-    index is dense, identity otherwise). One docmap join on the
-    driver's DuckDB connection — the set is a query-scoped filter
-    bitset, never the corpus."""
+    """Translate raw doc_ids into a sorted posting-space set
+    (ordinals when the index is dense, identity otherwise) — a binary
+    search on the reader's resident docmap; the set is a query-scoped
+    filter bitset, never the corpus."""
     if not ix.dense:
         return np.sort(np.asarray(doc_ids, dtype=np.int64))
-    import pandas as pd
-    from .build import docmap_path
-    con = ix._duckdb()
-    con.register("_filter_ids",
-                 pd.DataFrame({"doc_id": np.asarray(doc_ids, np.int64)}))
-    ords = con.execute(
-        f"SELECT m.ord FROM "
-        f"read_parquet('{docmap_path(ix.postings_dir)}/*.parquet') m "
-        f"JOIN _filter_ids USING (doc_id) ORDER BY m.ord"
-    ).fetchnumpy()["ord"]
-    con.unregister("_filter_ids")
-    return np.ascontiguousarray(ords, dtype=np.int64)
+    return ix.ords_of(doc_ids)
 
 
 def _metadata_filter_set(ix: IndexReader, docs_parquet: str,
@@ -1639,9 +1629,10 @@ def querystring_sort_indexed(ix: IndexReader, qs: str,
     Sort(SortField) with the documents parquet playing the doc-values
     role. Returns (rank, doc_id[, value]) rows; parity:
     ``ops.querylang.querystring_sort_topk``. Driver path: match set
-    from posting algebra, ONE DuckDB point-join against the documents
-    parquet ordered + limited at the source. Hot queries run the
-    distributed constrained plan and sort in Spark."""
+    from posting algebra, then a numpy sort for ``doc_id`` or ONE
+    DuckDB point-join against the documents parquet ordered + limited
+    at the source. Hot queries run the distributed constrained plan
+    and sort in Spark."""
     from ..ops.querylang import FILTER_FIELDS
     if sort_field not in FILTER_FIELDS:
         raise ValueError(f"unknown sort field {sort_field!r} "
@@ -1674,34 +1665,22 @@ def querystring_sort_indexed(ix: IndexReader, qs: str,
                       min_should_match)
     if not len(cand):
         return []
+    if ix.dense:
+        cand = ix.resolve_ords(cand)
+    if sort_field == "doc_id":
+        ids = np.sort(cand)
+        ids = ids[:int(k)] if ascending else ids[::-1][:int(k)]
+        return [(i + 1, int(d)) for i, d in enumerate(ids)]
     import pandas as pd
     con = ix._duckdb()
-    if ix.dense:
-        from .build import docmap_path
-        con.register("_sort_ords", pd.DataFrame({"ord": cand}))
-        join_ids = (f"(SELECT m.doc_id FROM read_parquet("
-                    f"'{docmap_path(ix.postings_dir)}/*.parquet') m "
-                    f"JOIN _sort_ords USING (ord))")
-    else:
-        con.register("_sort_ids", pd.DataFrame({"doc_id": cand}))
-        join_ids = "_sort_ids"
-    if sort_field == "doc_id":
-        rows = con.execute(
-            f"SELECT doc_id FROM {join_ids} c "
-            f"ORDER BY doc_id {dir_} LIMIT {int(k)}").fetchall()
-        out = [(i + 1, int(r[0])) for i, r in enumerate(rows)]
-    else:
-        rows = con.execute(
-            f"SELECT d.doc_id, d.{sort_field} FROM {join_ids} c "
-            f"JOIN read_parquet('{docs_parquet}') d USING (doc_id) "
-            f"ORDER BY d.{sort_field} {dir_}, d.doc_id ASC "
-            f"LIMIT {int(k)}").fetchall()
-        out = [(i + 1, int(r[0]), r[1]) for i, r in enumerate(rows)]
-    if ix.dense:
-        con.unregister("_sort_ords")
-    else:
-        con.unregister("_sort_ids")
-    return out
+    con.register("_sort_ids", pd.DataFrame({"doc_id": cand}))
+    rows = con.execute(
+        f"SELECT d.doc_id, d.{sort_field} FROM _sort_ids c "
+        f"JOIN read_parquet('{docs_parquet}') d USING (doc_id) "
+        f"ORDER BY d.{sort_field} {dir_}, d.doc_id ASC "
+        f"LIMIT {int(k)}").fetchall()
+    con.unregister("_sort_ids")
+    return [(i + 1, int(r[0]), r[1]) for i, r in enumerate(rows)]
 
 
 def facet_counts_indexed(ix: IndexReader, query_terms: list[str],
@@ -1739,26 +1718,16 @@ def facet_counts_indexed(ix: IndexReader, query_terms: list[str],
     if not arrs:
         return []
     matched = np.unique(np.concatenate(arrs))
-    con = ix._duckdb()
     if ix.dense:
-        from .build import docmap_path
-        con.register("_facet_ords", pd.DataFrame({"ord": matched}))
-        rows = con.execute(
-            f"SELECT d.{facet_col}, count(*) FROM "
-            f"read_parquet('{docmap_path(ix.postings_dir)}/*.parquet') m "
-            f"JOIN _facet_ords USING (ord) "
-            f"JOIN read_parquet('{docs_parquet}') d USING (doc_id) "
-            f"GROUP BY 1 ORDER BY 2 DESC, 1 ASC LIMIT {int(topn)}"
-        ).fetchall()
-        con.unregister("_facet_ords")
-    else:
-        con.register("_facet_ids", pd.DataFrame({"doc_id": matched}))
-        rows = con.execute(
-            f"SELECT d.{facet_col}, count(*) FROM _facet_ids "
-            f"JOIN read_parquet('{docs_parquet}') d USING (doc_id) "
-            f"GROUP BY 1 ORDER BY 2 DESC, 1 ASC LIMIT {int(topn)}"
-        ).fetchall()
-        con.unregister("_facet_ids")
+        matched = ix.resolve_ords(matched)
+    con = ix._duckdb()
+    con.register("_facet_ids", pd.DataFrame({"doc_id": matched}))
+    rows = con.execute(
+        f"SELECT d.{facet_col}, count(*) FROM _facet_ids "
+        f"JOIN read_parquet('{docs_parquet}') d USING (doc_id) "
+        f"GROUP BY 1 ORDER BY 2 DESC, 1 ASC LIMIT {int(topn)}"
+    ).fetchall()
+    con.unregister("_facet_ids")
     return [(f, int(n)) for f, n in rows]
 
 

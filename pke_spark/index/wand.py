@@ -64,19 +64,20 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 def _translate_rows(ix: IndexReader,
                     out: list[tuple]) -> list[tuple]:
     """Dense-ordinal indexes: map (rank, ord, score) rows back to raw
-    doc_ids via a k-row pushdown point read of the docmap. Tie-breaking
-    is unaffected — ordinals are assigned in ascending doc_id order, so
-    (score DESC, ord ASC) == (score DESC, doc_id ASC)."""
+    doc_ids with an array take on the reader's resident docmap
+    (``resolve_ords``). Tie-breaking is unaffected — ordinals are
+    assigned in ascending doc_id order, so (score DESC, ord ASC) ==
+    (score DESC, doc_id ASC)."""
     if not out:
         return out
-    dmap = ix.resolve_ords([d for _r, d, _s in out])
-    return [(r, dmap[d], s) for r, d, s in out]
+    ids = ix.resolve_ords([d for _r, d, _s in out])
+    return [(r, int(i), s) for (r, _d, s), i in zip(out, ids)]
 
 
 def _translate_ords(ix: IndexReader, ranked: DataFrame) -> DataFrame:
     """Dense-ordinal indexes: materialize the (<= k)-row ranking and
-    translate ords via resolve_ords — a driver-side point read — rather
-    than joining against a full docmap scan per query."""
+    translate ords on the driver via resolve_ords rather than joining
+    the ranking against a docmap scan per query."""
     if not ix.dense:
         return ranked
     rows = [(int(r["rank"]), int(r["doc_id"]), float(r["score"]))
@@ -543,8 +544,9 @@ def bm25_topk_batch(ix: IndexReader, queries: dict[str, list[str]],
               .filter(F.col("rank") <= k)
               .select("query_id", "rank", "doc_id", "score"))
     if ix.dense:
-        # ONE docmap scan amortized over the whole batch (the per-query
-        # point read would be q separate driver lookups)
+        # ONE docmap join amortized over the whole batch, kept in Spark
+        # like the ranking it translates (the reader's driver-side map
+        # would need every query's rows collected first)
         dm = ix.docmap()
         ranked = (dm.join(F.broadcast(ranked.withColumnRenamed(
             "doc_id", "ord")), "ord")

@@ -161,7 +161,7 @@ def _rank_doc_rows(doc_id: int, terms: list[str], positions: list[int],
         else:
             run.append(t)
     flush()
-    top = sorted(cands.items(), key=lambda kv: (-round(kv[1], 6), kv[0]))[:k]
+    top = sorted(cands.items(), key=lambda kv: (-round(kv[1], 6), kv[0]))[:max(k, 0)]
     return [(doc_id, i + 1, t, round(s, 6))
             for i, (t, s) in enumerate(top)]
 
@@ -241,7 +241,7 @@ def _textrank_tp_rows(doc_id: int, terms: list[str], positions: list[int],
             cands[phrase] = (sum(scores[w] for w in run) + start * 1e-8, start)
     if not cands:
         return []
-    top = sorted(cands.items(), key=lambda kv: (-round(kv[1][0], 6), kv[0]))[:k]
+    top = sorted(cands.items(), key=lambda kv: (-round(kv[1][0], 6), kv[0]))[:max(k, 0)]
     return [(doc_id, i + 1, t, round(v[0], 6))
             for i, (t, v) in enumerate(top)]
 

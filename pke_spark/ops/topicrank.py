@@ -159,7 +159,7 @@ def _topicrank_rows(doc_id: int, terms: list[str], stopset: set, k: int,
         first = min(reps, key=lambda n: min(cands[n][1]))
         rows.append((first, float(scores[a])))
     rows.sort(key=lambda r: (-round(r[1], 6), r[0]))
-    rows = rows[:k]
+    rows = rows[:max(k, 0)]
     return [(doc_id, i + 1, c, round(s, 6))
             for i, (c, s) in enumerate(rows)]
 
@@ -263,7 +263,7 @@ def _multipartite_rows(doc_id: int, terms: list[str], stopset: set, k: int,
     pers = np.full(n, 1.0 / n)
     scores = _pagerank_dense(adj, pers, alpha=ALPHA)
     order = sorted(range(n), key=lambda i: (-round(float(scores[i]), 6),
-                                            names[i]))[:k]
+                                            names[i]))[:max(k, 0)]
     return [(doc_id, i + 1, names[j], round(float(scores[j]), 6))
             for i, j in enumerate(order)]
 

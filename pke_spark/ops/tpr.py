@@ -313,7 +313,7 @@ def topical_pagerank_topk(docs: DataFrame, k: int = 5,
             else:
                 run.append(t)
         flush()
-        top = sorted(cands.items(), key=lambda kv: (-round(kv[1], 6), kv[0]))[:k]
+        top = sorted(cands.items(), key=lambda kv: (-round(kv[1], 6), kv[0]))[:max(k, 0)]
         return [(doc_id, i + 1, t, round(v, 6))
                 for i, (t, v) in enumerate(top)]
 

@@ -80,7 +80,7 @@ def _yake_lite_doc(k: int):
                                                / (frequency + spread))))
         out.sort(key=lambda r: (r[2], r[0]))
         return [(doc_id, rank, t, tf, wt)
-                for rank, (t, tf, wt) in enumerate(out[:k], start=1)]
+                for rank, (t, tf, wt) in enumerate(out[:max(k, 0)], start=1)]
 
     return row_fn
 

@@ -1,0 +1,31 @@
+"""k <= 0 returns zero rows from every per-doc ranker, as the SQL twins'
+``rank <= k`` filter does (a Python ``[:k]`` slice with k < 0 would keep
+all but |k| candidates)."""
+
+from __future__ import annotations
+
+import pytest
+
+from pke_spark.ops import graph, topicrank, tpr, yake
+
+RANKERS = {
+    "yake_lite": yake.yake_lite,
+    "textrank_topk": graph.textrank_topk,
+    "textrank_top_percent": graph.textrank_top_percent,
+    "topicrank_topk": topicrank.topicrank_topk,
+    "multipartiterank_topk": topicrank.multipartiterank_topk,
+    "topical_pagerank_topk": lambda docs, k: tpr.topical_pagerank_topk(
+        docs, k, model=tpr.load_tpr_cached(docs.sparkSession)),
+}
+
+
+@pytest.fixture(scope="module")
+def docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").limit(8).cache()
+
+
+@pytest.mark.parametrize("k", [0, -1])
+@pytest.mark.parametrize("name", sorted(RANKERS))
+def test_nonpositive_k_returns_no_rows(docs, name, k):
+    assert RANKERS[name](docs, 5).count() > 0  # the docs do rank
+    assert RANKERS[name](docs, k).count() == 0
