@@ -44,6 +44,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -168,6 +169,28 @@ def swap_postings(index_dir: str, new_name: str) -> None:
     if os.path.abspath(old) != os.path.abspath(f"{index_dir}/{new_name}"):
         shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(docmap_path(old), ignore_errors=True)
+
+
+# Postings row-group bound, in rows. Every postings file is written
+# sorted by (term, shard), so each row group covers a narrow term range
+# and the reader settles a dictionary or postings miss from the footer
+# min/max alone, then reads one such group per file. Smaller groups make
+# that read cheaper but cost footer and page overhead: re-writing one
+# 6k-doc index, 1024 rows grew the postings 16.8%, 2048 rows 9.9%, 4096
+# rows 7.4%, while a point read's p50 went 0.47 / 0.53 / 0.81 ms against
+# 2.65 ms unsorted. 2048 is the smallest bound inside the 15% growth cap.
+POSTINGS_ROW_GROUP_ROWS = 2048
+
+
+def write_postings(postings: DataFrame, path: str) -> None:
+    """The one postings writer: rows sorted by (term, shard) within each
+    output file, row groups bounded at POSTINGS_ROW_GROUP_ROWS. The sort
+    is partition-local (no exchange); parquet-mr records each group's
+    ``term`` min/max in the footer, which is the index
+    ``IndexReader`` routes its misses through."""
+    (postings.sortWithinPartitions("term", "shard").write.mode("overwrite")
+     .option("parquet.block.row.count.limit", POSTINGS_ROW_GROUP_ROWS)
+     .parquet(path))
 
 
 def _parquet_rows(path: str) -> int:
@@ -699,8 +722,7 @@ def build_index_teed(docs: DataFrame, index_dir: str, *,
     frag_key = F.xxhash64("term", F.element_at("blocks", 1)["first_doc"])
     salted = runs.withColumn(
         "shard", F.pmod(frag_key, F.lit(n_salts)).cast("int"))
-    (salted.repartition("term", "shard")
-     .write.mode("overwrite").parquet(new_dir))
+    write_postings(salted.repartition("term", "shard"), new_dir)
 
     if driver_stats_max_bytes is None:
         driver_stats_max_bytes = DRIVER_STATS_MAX_BYTES
@@ -793,8 +815,7 @@ def build_index_direct(docs: DataFrame, index_dir: str, *,
     frag_key = F.xxhash64("term", F.element_at("blocks", 1)["first_doc"])
     salted = runs.withColumn(
         "shard", F.pmod(frag_key, F.lit(n_salts)).cast("int"))
-    (salted.repartition("term", "shard")
-     .write.mode("overwrite").parquet(new_dir))
+    write_postings(salted.repartition("term", "shard"), new_dir)
 
     if n_docs is None:
         n_docs = docs.count()
@@ -1058,9 +1079,10 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
     # bounding any reduce task's share of a mega-term to ~1/n_salts of
     # its fragments — NO per-term hot-term detection pass is needed at
     # all (the old design's df-threshold prepass cost a full extra
-    # aggregation over the token table). Cold terms land in <= n_salts
-    # row groups, which keeps the read side's term-pushdown pruning
-    # effective.
+    # aggregation over the token table). Routing is by hash, so any
+    # file can hold any term: pruning comes from write_postings, which
+    # sorts each file by term into bounded row groups — a cold term's
+    # fragments then sit in one row group per file.
     runs = tc.mapInArrow(lambda it: _encode_runs(it, block_size, remap_bc),
                          POSTINGS_SCHEMA)
     frag_key = F.xxhash64("term", F.element_at("blocks", 1)["first_doc"])
@@ -1083,7 +1105,7 @@ def encode_postings(spark: SparkSession, index_dir: str, *,
                   .mapInPandas(lambda it: _merge_runs(it, block_size,
                                                       max_merge_docs),
                                POSTINGS_SCHEMA))
-    routed.write.mode("overwrite").parquet(f"{index_dir}/{out_name}")
+    write_postings(routed, f"{index_dir}/{out_name}")
     if dl_cached is not None:
         dl_cached.unpersist()
     if remap_bc is not None:
@@ -1123,8 +1145,7 @@ def compact(spark: SparkSession, index_dir: str, *,
               .repartition("term")
               .mapInPandas(_merge, POSTINGS_SCHEMA))
     new_name = f"postings_{uuid.uuid4().hex[:12]}"
-    merged.unionByName(keep).write.mode("overwrite") \
-        .parquet(f"{index_dir}/{new_name}")
+    write_postings(merged.unionByName(keep), f"{index_dir}/{new_name}")
     # dense indexes: the ordinal space is unchanged by a merge, so the
     # docmap is carried to the new postings name BEFORE the pointer
     # swap (swap deletes the old postings AND its docmap)
@@ -1143,6 +1164,16 @@ def compact(spark: SparkSession, index_dir: str, *,
                 shutil.copy2(os.path.join(old_dm, f),
                              os.path.join(new_dm, f))
     swap_postings(index_dir, new_name)
+
+
+class _FileRowGroups(NamedTuple):
+    """One postings file in the reader's row-group index."""
+    path: str
+    md: object           # pyarrow FileMetaData, parsed once
+    leaves: dict         # top-level column -> parquet leaf indices
+    reach: list          # running max of the ranged groups' term max
+    ranged: list         # (min, max, row group) sorted by min
+    unranged: list       # row groups without term statistics
 
 
 class IndexReader:
@@ -1166,6 +1197,7 @@ class IndexReader:
         self._docset_rows = 0
         self._duck = None
         self._ord_doc_ids = None
+        self._rg_index = None
         # tombstones resolve at construction, like the postings pointer:
         # a reader serves the live set it saw when built (cheap — a glob
         # plus a small parquet read only when deletes exist)
@@ -1199,34 +1231,154 @@ class IndexReader:
             self._post = p.persist() if self.cache else p
         return self._post
 
+    def _term_row_groups(self) -> list:
+        """Per postings file: its parsed footer, the leaf columns of each
+        top-level column, and one ``term`` (min, max) pair per row group
+        — the driver's whole view of the dictionary layout, never a term
+        list. Built once from the footers alone; each read reopens the
+        file with the kept ``FileMetaData``, so the reader holds no
+        descriptors. Ranged groups are ordered by min with a running max
+        of their maxes (``reach``), so ``_row_groups_in`` bisects both
+        ends; a group without statistics (an older or unsorted writer)
+        is always a candidate."""
+        if self._rg_index is None:
+            import glob
+            from itertools import accumulate
+
+            import pyarrow.parquet as pq
+            self._rg_index = []
+            for path in sorted(glob.glob(f"{self.postings_dir}/*.parquet")):
+                md = pq.read_metadata(path)
+                leaves: dict[str, list[int]] = {}
+                for i in range(md.num_columns):
+                    top = md.schema.column(i).path.split(".")[0]
+                    leaves.setdefault(top, []).append(i)
+                (col,) = leaves["term"]
+                ranged, unranged = [], []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(col).statistics
+                    if (st is not None and st.has_min_max
+                            and isinstance(st.min, str)):
+                        ranged.append((st.min, st.max, g))
+                    else:
+                        unranged.append(g)
+                ranged.sort()
+                self._rg_index.append(_FileRowGroups(
+                    path, md, leaves,
+                    list(accumulate((r[1] for r in ranged), max)),
+                    ranged, unranged))
+        return self._rg_index
+
+    def _row_groups_in(self, lo: str, hi: str | None) -> dict:
+        """{file position: row-group ids} keeping every row group whose
+        term range can hold a term in [lo, hi) (``hi=None``: unbounded).
+        On a term-sorted file this is two bisects and a window of
+        adjacent groups."""
+        from bisect import bisect_left
+        plan = {}
+        for k, f in enumerate(self._term_row_groups()):
+            # (hi,) sorts before every (hi, max, g): end is the first
+            # group whose min is >= hi
+            end = (len(f.ranged) if hi is None
+                   else bisect_left(f.ranged, (hi,)))
+            groups = [f.ranged[j][2]
+                      for j in range(bisect_left(f.reach, lo), end)
+                      if f.ranged[j][1] >= lo] + f.unranged
+            if groups:
+                plan[k] = set(groups)
+        return plan
+
+    def _read_row_group(self, f, g: int, columns: list[str]):
+        """``columns`` of row group ``g`` of postings file ``f`` (one
+        open, one single-threaded read, one close).
+
+        Serving reads allocate from the system allocator, not Arrow's
+        default jemalloc pool: every miss allocates and frees a few
+        small buffers, and jemalloc keeps freed pages resident for its
+        decay time — on the 6k-doc benchmark index (4-core host) that
+        held driver peak RSS about 3.5 MB (1.5%) higher. The pool is
+        chosen per call, so no process-wide Arrow setting changes."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        reader = pq.ParquetReader(memory_pool=pa.system_memory_pool())
+        reader.open(f.path, metadata=f.md)
+        try:
+            return reader.read_row_group(
+                g, column_indices=[i for c in columns for i in f.leaves[c]],
+                use_threads=False)
+        finally:
+            reader.close()
+
+    def _read_rows(self, plan: dict, columns: list[str]):
+        """Yield ``columns`` of each planned row group as an Arrow
+        table, in file and row-group order."""
+        files = self._term_row_groups()
+        for k in sorted(plan):
+            for g in sorted(plan[k]):
+                yield self._read_row_group(files[k], g, columns)
+
+    def _read_terms(self, terms: list[str], column: str):
+        """Yield ``(term, value of column)`` for every postings row of
+        ``terms``, read from the candidate row groups of each term's
+        point range."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        plan: dict = {}
+        for t in terms:
+            # [t, t + NUL) holds t alone: NUL is the least code point
+            for k, groups in self._row_groups_in(t, t + "\0").items():
+                plan.setdefault(k, set()).update(groups)
+        pool = pa.system_memory_pool()
+        wanted = pa.array(terms, pa.string(), memory_pool=pool)
+        for tbl in self._read_rows(plan, ["term", column]):
+            hit = pc.filter(tbl, pc.is_in(tbl.column("term"),
+                                          value_set=wanted,
+                                          memory_pool=pool),
+                            memory_pool=pool)
+            yield from zip(hit.column("term").to_pylist(),
+                           hit.column(column).to_pylist())
+
+    def dictionary_range(self, lo: str, hi: str | None):
+        """``(term, df)`` postings rows of the row groups whose term
+        range can hold a term in [lo, hi) — a superset the caller
+        filters; the dictionary expansions run their SQL over it. A
+        stream read one row group at a time as its consumer pulls: an
+        unbounded range (a regex with no literal prefix) covers the
+        whole dictionary, of which the driver holds only the consumer's
+        read-ahead (DuckDB's Arrow scan buffers a few dozen batches)."""
+        import pyarrow as pa
+        schema = pa.schema([("term", pa.string()), ("df", pa.int64())])
+        return pa.RecordBatchReader.from_batches(schema, (
+            batch
+            for tbl in self._read_rows(self._row_groups_in(lo, hi),
+                                       ["term", "df"])
+            for batch in tbl.to_batches()))
+
     # per-term dictionary cache bound: ~100k entries is a few MB on the
     # driver regardless of corpus vocabulary size
     TERM_CACHE_MAX = 100_000
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """(term -> df) for EXACTLY the requested terms, via a
-        predicate-pushdown read of the postings metadata columns
-        (``WHERE term IN (...)`` hits the parquet min/max row-group
-        stats; the blocks column is never touched thanks to column
-        pruning). Results — including misses, stored as 0 — go into a
-        bounded LRU so repeated serving never re-reads, and the driver
-        NEVER materializes the full vocabulary (at code-corpus scale the
-        term dictionary is billions of entries)."""
+        """(term -> df) for EXACTLY the requested terms. A miss reads the
+        ``(term, df)`` columns of only the row groups whose footer
+        min/max can hold a missing term (``_term_row_groups``) — one
+        small row group per postings file on a term-sorted index; the
+        blocks column is never touched. Results — including misses,
+        stored as 0 — go into a bounded LRU so repeated serving never
+        re-reads, and the driver NEVER materializes the full vocabulary
+        (at code-corpus scale the term dictionary is billions of
+        entries)."""
         from collections import OrderedDict
         if self._term_df is None:
             self._term_df = OrderedDict()
         cache = self._term_df
         missing = [t for t in dict.fromkeys(terms) if t not in cache]
         if missing:
-            inlist = ", ".join("'" + t.replace("'", "''") + "'"
-                               for t in missing)
-            rows = self._duckdb().execute(
-                f"SELECT term, sum(df) FROM "
-                f"read_parquet('{self.postings_dir}/*.parquet') "
-                f"WHERE term IN ({inlist}) GROUP BY term").fetchall()
-            got = {t: int(d) for t, d in rows}
+            got: dict[str, int] = dict.fromkeys(missing, 0)
+            for t, d in self._read_terms(missing, "df"):
+                got[t] += d
             for t in missing:
-                cache[t] = got.get(t, 0)
+                cache[t] = got[t]
             while len(cache) > self.TERM_CACHE_MAX:
                 cache.popitem(last=False)
         out = {}
@@ -1253,12 +1405,13 @@ class IndexReader:
         """term -> (doc_ids, tfs, dls) numpy arrays, concatenated over
         the term's fragments with tombstones already applied — the
         driver serving path's working set. Misses are fetched in ONE
-        term-pruned parquet point read (all missing terms per call) and
-        kept in an LRU bounded by total cached posting rows, so a
-        sustained query stream stops re-reading and re-decoding its hot
-        terms entirely. Sound to cache per reader: both the postings
-        pointer and the tombstone set are fixed at reader construction.
-        Empty results are cached too (repeated miss-queries are free)."""
+        read of the row groups whose term range can hold them (all
+        missing terms per call, see ``_term_row_groups``) and kept in an
+        LRU bounded by total cached posting rows, so a sustained query
+        stream stops re-reading and re-decoding its hot terms entirely.
+        Sound to cache per reader: both the postings pointer and the
+        tombstone set are fixed at reader construction. Empty results
+        are cached too (repeated miss-queries are free)."""
         from collections import OrderedDict
         if self._decoded is None:
             self._decoded = OrderedDict()
@@ -1277,14 +1430,8 @@ class IndexReader:
         if missing:
             from . import codec
             from .delete import keep_mask
-            inlist = ", ".join("'" + t.replace("'", "''") + "'"
-                               for t in missing)
-            rows = self._duckdb().execute(
-                f"SELECT term, blocks FROM "
-                f"read_parquet('{self.postings_dir}/*.parquet') "
-                f"WHERE term IN ({inlist})").fetchall()
             got: dict[str, list] = {t: [] for t in missing}
-            for term, blocks in rows:
+            for term, blocks in self._read_terms(missing, "blocks"):
                 got[term].append(codec.decode_blocks(blocks))
             import numpy as np
             for t in missing:
@@ -1341,12 +1488,13 @@ class IndexReader:
         return arr
 
     # DuckDB worker threads for the reader's connection. One: it serves
-    # one client's point reads, and each extra worker keeps its own
-    # allocator arenas resident — on a 6k-doc dense index (4-core
-    # host) the default four workers held driver peak RSS 16-18 MB
-    # (7-8%) above one worker, at the same warm query latency. The cost
-    # is scan parallelism on cold misses: a 2M-term dictionary point
-    # read took 69 ms on 4 threads and 203 ms on 1.
+    # one client's small reads (docmap load, metadata filters, the
+    # expansion SQL over already-pruned dictionary rows), and each extra
+    # worker keeps its own allocator arenas resident — on a 6k-doc
+    # dense index (4-core host) the default four workers held driver
+    # peak RSS 16-18 MB (7-8%) above one worker, at the same warm query
+    # latency. Dictionary and postings misses do not run here: they
+    # read their candidate row groups with pyarrow (_read_rows).
     READER_DUCKDB_THREADS = 1
 
     def _duckdb(self):

@@ -64,7 +64,8 @@ from pyspark.sql import functions as F
 from . import codec
 from ..rows import rows_df
 from .build import (POSTINGS_SCHEMA, _append_manifest, docmap_path,
-                    postings_path, swap_postings, write_stats)
+                    postings_path, swap_postings, write_postings,
+                    write_stats)
 
 TOMBSTONE_DIR = "tombstones"
 
@@ -280,8 +281,7 @@ def purge_deleted(spark: SparkSession, index_dir: str, *,
     new_dir = f"{index_dir}/{new_name}"
     # row-wise rewrite: no repartition — the purge is embarrassingly
     # parallel per posting row, so the corpus-sized blocks never shuffle
-    p.mapInPandas(_purge, POSTINGS_SCHEMA) \
-        .write.mode("overwrite").parquet(new_dir)
+    write_postings(p.mapInPandas(_purge, POSTINGS_SCHEMA), new_dir)
 
     # exact stats from the surviving postings (self-healing: no delta
     # arithmetic against possibly-stale old stats). Decode only the

@@ -14,12 +14,15 @@ reads. Row-for-row parity with the DataFrame ops is asserted in
 
 Physical shapes:
 
-- **dictionary expansion**: one DuckDB point read over the postings
-  parquet metadata columns. The prefix predicate is the sargable range
-  ``term >= p AND term < p + U+10FFFF`` (parquet row-group min/max
-  prune; the ``blocks`` column is never touched), the fuzzy scan adds
-  a length band before any edit-distance evaluation — mirroring
-  Lucene's MultiTermQuery rewrite against its terms dict.
+- **dictionary expansion**: the prefix range ``[p, p + U+10FFFF)``
+  picks the postings row groups whose footer ``term`` min/max meet it
+  (postings files are term-sorted, so that is a run of adjacent
+  groups per file; ``IndexReader.dictionary_range``), their
+  ``(term, df)`` columns are read with pyarrow (the ``blocks`` column
+  is never touched), and the expansion SQL — sargable range, the fuzzy
+  length band before any edit distance, LIKE, regexp — runs over those
+  rows on the reader's DuckDB connection. This mirrors Lucene's
+  MultiTermQuery rewrite against its terms dict.
 - **query-string execution**: expansions + literal terms score via the
   reader's decoded-postings LRU (sorted-array accumulation, the
   ``_driver_rows`` discipline); MUST / MUST_NOT are sorted-array set
@@ -99,12 +102,27 @@ def _over_budget(ix: IndexReader, terms: list[str]) -> bool:
 
 # ------------------------------------------------------------ expansion
 
+def _expand_sql(ix: IndexReader, lo: str, hi: str | None,
+                sql: str) -> list[str]:
+    """Run an expansion's SQL on the reader's DuckDB connection, with
+    ``term_dictionary`` bound to a stream of the ``(term, df)`` rows of
+    the row groups whose term range meets [lo, hi) (``IndexReader
+    .dictionary_range``). The SQL keeps its own range predicate, so the
+    pruned rows only bound the work, never the answer."""
+    con = ix._duckdb()
+    con.register("term_dictionary", ix.dictionary_range(lo, hi))
+    try:
+        return [r[0] for r in con.execute(sql).fetchall()]
+    finally:
+        con.unregister("term_dictionary")
+
+
 def expand_prefix_indexed(ix: IndexReader, prefix: str,
                           max_expansions: int = 32) -> list[str]:
     """Expansion terms for ``prefix*`` from the index term dictionary,
     (df DESC, term ASC)-ranked and capped — identical semantics to
-    ``ops.termexpand.expand_prefix`` (parity-tested). One pushdown
-    range read; df is summed over LSM fragments (each (term, doc)
+    ``ops.termexpand.expand_prefix`` (parity-tested). One pruned
+    dictionary range read; df is summed over LSM fragments (each (term, doc)
     lives in exactly one fragment, so the sum IS the df).
 
     Deleted-doc df caveat (ADVICE r4, all ``expand_*_indexed``): the
@@ -120,12 +138,12 @@ def expand_prefix_indexed(ix: IndexReader, prefix: str,
     if not prefix:
         raise ValueError("empty prefix would expand the whole vocabulary")
     hi = prefix + chr(0x10FFFF)
-    rows = ix._duckdb().execute(
-        f"SELECT term FROM read_parquet('{ix.postings_dir}/*.parquet') "
+    return _expand_sql(
+        ix, prefix, hi,
+        f"SELECT term FROM term_dictionary "
         f"WHERE term >= {_sq(prefix)} AND term < {_sq(hi)} "
         f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}").fetchall()
-    return [r[0] for r in rows]
+        f"LIMIT {int(max_expansions)}")
 
 
 def expand_fuzzy_indexed(ix: IndexReader, term: str, max_edits: int = 1,
@@ -139,23 +157,25 @@ def expand_fuzzy_indexed(ix: IndexReader, term: str, max_edits: int = 1,
     if max_edits < 1:
         raise ValueError("max_edits must be >= 1 (0 is a TermQuery)")
     pfx = ""
+    lo, hi = "", None
     if prefix_len > 0:
-        p = term[:prefix_len]
-        pfx = (f"AND term >= {_sq(p)} AND term < {_sq(p + chr(0x10FFFF))} ")
-    rows = ix._duckdb().execute(
-        f"SELECT term FROM read_parquet('{ix.postings_dir}/*.parquet') "
+        lo = term[:prefix_len]
+        hi = lo + chr(0x10FFFF)
+        pfx = f"AND term >= {_sq(lo)} AND term < {_sq(hi)} "
+    return _expand_sql(
+        ix, lo, hi,
+        f"SELECT term FROM term_dictionary "
         f"WHERE abs(length(term) - {len(term)}) <= {int(max_edits)} {pfx}"
         f"GROUP BY term "
         f"HAVING levenshtein(term, {_sq(term)}) <= {int(max_edits)} "
         f"ORDER BY levenshtein(term, {_sq(term)}) ASC, sum(df) DESC, "
-        f"term ASC LIMIT {int(max_expansions)}").fetchall()
-    return [r[0] for r in rows]
+        f"term ASC LIMIT {int(max_expansions)}")
 
 
 def expand_wildcard_indexed(ix: IndexReader, pattern: str,
                             max_expansions: int = 32) -> list[str]:
     """Expansion terms for a wildcard pattern from the index term
-    dictionary — literal-prefix pushdown range + LIKE, (df DESC,
+    dictionary — literal-prefix range + LIKE, (df DESC,
     term ASC)-ranked, capped. Parity: ``ops.termexpand
     .expand_wildcard``."""
     from ..ops.termexpand import (_check_wildcard, wildcard_like,
@@ -163,13 +183,13 @@ def expand_wildcard_indexed(ix: IndexReader, pattern: str,
     _check_wildcard(pattern)
     pfx = wildcard_prefix(pattern)
     hi = pfx + chr(0x10FFFF)
-    rows = ix._duckdb().execute(
-        f"SELECT term FROM read_parquet('{ix.postings_dir}/*.parquet') "
+    return _expand_sql(
+        ix, pfx, hi,
+        f"SELECT term FROM term_dictionary "
         f"WHERE term >= {_sq(pfx)} AND term < {_sq(hi)} "
         f"AND term LIKE {_sq(wildcard_like(pattern))} ESCAPE '\\' "
         f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}").fetchall()
-    return [r[0] for r in rows]
+        f"LIMIT {int(max_expansions)}")
 
 
 def expand_regex_indexed(ix: IndexReader, pattern: str,
@@ -189,12 +209,12 @@ def expand_regex_indexed(ix: IndexReader, pattern: str,
     pfx = regex_prefix(pattern)
     gate = (f"term >= {_sq(pfx)} AND term < {_sq(pfx + chr(0x10FFFF))} "
             f"AND ") if pfx else ""
-    rows = ix._duckdb().execute(
-        f"SELECT term FROM read_parquet('{ix.postings_dir}/*.parquet') "
+    return _expand_sql(
+        ix, pfx, pfx + chr(0x10FFFF) if pfx else None,
+        f"SELECT term FROM term_dictionary "
         f"WHERE {gate}regexp_full_match(term, {_sq(pattern)}) "
         f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}").fetchall()
-    return [r[0] for r in rows]
+        f"LIMIT {int(max_expansions)}")
 
 
 def _clause_expansions(ix: IndexReader, pq: ParsedQuery,

@@ -33,10 +33,15 @@ from ..tokenizer import TEXT_STOPWORDS, duckdb_toks_cte
 
 
 def _round6_half_up(x: float) -> float:
-    """Bit-exact replica of Spark's ``F.round(x, 6)``: Spark rounds via
-    ``BigDecimal.valueOf(double)`` (the double's SHORTEST round-trip
-    decimal — the same digits CPython's ``repr`` produces) then
-    ``setScale(6, HALF_UP)``."""
+    """Replica of Spark's ``F.round(x, 6)``: Spark rounds via
+    ``BigDecimal.valueOf(double)``, i.e. the digits of
+    ``Double.toString``, then ``setScale(6, HALF_UP)``. This starts from
+    CPython's ``repr`` (the SHORTEST round-trip digits), so it is
+    bit-exact only on JVMs whose ``Double.toString`` also gives the
+    shortest round-trip digits (JDK 19+); older JVMs can emit extra
+    digits and round a boundary value differently.
+    ``tests/test_yake_lite.py`` pins it per input on the JVM it runs
+    on."""
     from decimal import ROUND_HALF_UP, Decimal
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
                                            rounding=ROUND_HALF_UP))
@@ -47,9 +52,13 @@ def _yake_lite_doc(k: int):
     feature is a fact of the document's own token sequence, so the
     token-row groupBy/join/window plan (3 exchanges of token-scale
     rows) collapses into one Python pass (guide §2.3/§4). Float path
-    mirrors the SQL twin: exact integer sums, two-pass sample stddev,
-    ln/ln position, HALF_UP 6-decimal round BEFORE ranking (ties on the
-    rounded weight break by term ASC, exactly the old window's order)."""
+    mirrors the SQL twin: exact integer sums, ln/ln position, HALF_UP
+    6-decimal round BEFORE ranking (ties on the rounded weight break by
+    term ASC, exactly the old window's order). The sample stddev is
+    two-pass (mean first, then squared deviations), not the streaming
+    Welford update DuckDB's ``stddev`` uses: the two can differ in the
+    last ULP, which changes a weight only when it sits exactly on a
+    6-decimal rounding boundary."""
     import math as _m
 
     def row_fn(doc_id: int, terms: list) -> list:

@@ -191,7 +191,8 @@ def _incremental_fold(spark: SparkSession, index_dir: str, *,
     from pyspark.sql import functions as F
 
     from .index.build import (POSTINGS_SCHEMA, _encode_runs, docmap_path,
-                              postings_path, swap_postings, write_stats)
+                              postings_path, swap_postings, write_postings,
+                              write_stats)
 
     cur = postings_path(index_dir)
     if os.path.exists(docmap_path(cur)):
@@ -227,9 +228,9 @@ def _incremental_fold(spark: SparkSession, index_dir: str, *,
     runs = tc.mapInArrow(lambda it: _encode_runs(it, block_size, None),
                          POSTINGS_SCHEMA)
     frag_key = F.xxhash64("term", F.element_at("blocks", 1)["first_doc"])
-    (runs.withColumn("shard", F.pmod(frag_key, F.lit(n_salts)).cast("int"))
-     .repartition("term", "shard")
-     .write.mode("overwrite").parquet(new_dir))
+    write_postings(
+        runs.withColumn("shard", F.pmod(frag_key, F.lit(n_salts)).cast("int"))
+        .repartition("term", "shard"), new_dir)
     # adopt the immutable current postings files (hardlink, O(files));
     # uuid part-file names cannot collide across writes
     for f in os.listdir(cur):

@@ -11,6 +11,7 @@ unchanged DuckDB oracle.
 from __future__ import annotations
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -24,14 +25,23 @@ ROUND_CASES = [
     1.0000005, 123.4567895, 0.3333333333333333, 1.0986122886681098,
     0.552722, 7.767123e-1, 1e-7, 9.9e-7, 0.000001, 0.0000015,
 ]
+# seeded random doubles over the weight formula's range, plus values
+# one ULP either side of 6-decimal half-way points
+_RNG = np.random.default_rng(20240611)
+ROUND_CASES += [float(v) for v in _RNG.uniform(0.0, 50.0, 200)]
+ROUND_CASES += [float(v) for v in 10.0 ** _RNG.uniform(-8, 3, 100)]
+ROUND_CASES += [float(np.nextafter(h, d)) for h in
+                (np.round(_RNG.uniform(0.0, 5.0, 50), 6) + 5e-7)
+                for d in (0.0, np.inf)]
 
 
 def test_round6_half_up_matches_spark_round(spark):
-    df = spark.createDataFrame([(v,) for v in ROUND_CASES], "x double")
-    got = [r.y for r in df.select(F.round("x", 6).alias("y"))
-           .orderBy("y").collect()]
-    want = sorted(_round6_half_up(v) for v in ROUND_CASES)
-    assert got == want
+    df = spark.createDataFrame(list(enumerate(ROUND_CASES)), "i int, x double")
+    got = {r.i: r.y for r in df.select("i", F.round("x", 6).alias("y"))
+           .collect()}
+    assert len(got) == len(ROUND_CASES)
+    for i, v in enumerate(ROUND_CASES):
+        assert got[i] == _round6_half_up(v), (i, v, got[i])
 
 
 def test_yake_lite_matches_duckdb_oracle(spark, sf_dir):
