@@ -2,7 +2,7 @@
 
 Several operators persist an intermediate DataFrame across an eager
 fitting action AND the lazily-returned ranking built on it (NB feature
-vectors, LSH signatures, dedup pools). Unpersisting before returning
+vectors, LSH signatures). Unpersisting before returning
 would silently re-trigger the full upstream DAG when the caller
 materializes the result; never unpersisting leaks cached partitions in
 long-lived sessions. The compromise: each operator keeps ONE cached

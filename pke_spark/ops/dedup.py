@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ._cache import cache_latest
 
 from ..tokenizer import duckdb_toks_cte, tokens_exploded
+from .perdoc import per_doc_rows
 
 N_MINHASH = 16
 N_BANDS = 2          # 2 bands x 8 rows: P(candidate) = 1-(1-J^8)^2
@@ -75,7 +76,6 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     oracle hashes — are unchanged."""
     import hashlib
 
-    from .perdoc import per_doc_rows
 
     def row_fn(doc_id: int, terms: list[str]) -> list[tuple]:
         uniq = set(terms)
@@ -108,7 +108,6 @@ def _band_rows(docs: DataFrame, n_hashes: int = N_MINHASH,
     each sig in i order, comma-joined)."""
     import hashlib
 
-    from .perdoc import per_doc_rows
 
     rows_per = n_hashes // n_bands
 
@@ -270,7 +269,6 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
                         threshold: float = JACCARD_THRESHOLD) -> DataFrame:
     """(doc_a, doc_b, jaccard) over distinct token n-gram shingles,
     exact, via equi-join on shingle (no cross join)."""
-    from .perdoc import per_doc_rows
 
     def sh_rows(did: int, terms: list) -> list:
         # a doc's distinct shingle set is a per-doc fact — building it

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..tokenizer import TEXT_STOPWORDS
+from .perdoc import per_doc_rows
 
 ALPHA = 0.85
 
@@ -185,7 +186,6 @@ def _rank_doc(pdf: pd.DataFrame, stopset: set, window: int, weighted: bool,
 def _graph_topk(docs: DataFrame, k: int, window: int, weighted: bool,
                 personalize: bool,
                 stoplist: tuple[str, ...] = TEXT_STOPWORDS) -> DataFrame:
-    from .perdoc import per_doc_rows
     stopset = set(stoplist)
 
     def row_fn(doc_id: int, terms: list[str]) -> list[tuple]:
@@ -246,27 +246,12 @@ def _textrank_tp_rows(doc_id: int, terms: list[str], positions: list[int],
             for i, (t, v) in enumerate(top)]
 
 
-def _textrank_tp_doc(pdf: pd.DataFrame, stopset: set, k: int,
-                     top_percent: float) -> pd.DataFrame:
-    """Frame wrapper around ``_textrank_tp_rows`` (driver-side tests)."""
-    pdf = pdf.sort_values("pos")
-    rows = _textrank_tp_rows(int(pdf["doc_id"].iloc[0]),
-                             pdf["term"].tolist(), pdf["pos"].tolist(),
-                             stopset, k, top_percent)
-    return pd.DataFrame({
-        "doc_id": pd.Series([r[0] for r in rows], dtype="int64"),
-        "rank": pd.array([r[1] for r in rows], dtype="int32"),
-        "candidate": pd.Series([r[2] for r in rows], dtype="object"),
-        "score": pd.Series([r[3] for r in rows], dtype="float64")})
-
-
 def textrank_top_percent(docs: DataFrame, k: int = 5,
                          top_percent: float = 0.33,
                          stoplist: tuple[str, ...] = TEXT_STOPWORDS
                          ) -> DataFrame:
     """pke's default TextRank usage: candidates rebuilt from the
     top-percent words (rows-only; parity in tests/test_graph_nx.py)."""
-    from .perdoc import per_doc_rows
     stopset = set(stoplist)
 
     def row_fn(doc_id: int, terms: list[str]) -> list[tuple]:

@@ -14,19 +14,26 @@ with DuckDB oracle twins.
 - bigrams: n=2 slice of ngram_selection (pke/base.py:237-264, C1) via
   window lead() (no self-join shuffle).
 
+firstphrases, kpminer and kpminer_dedup rank inside per-doc passes
+(ops/perdoc.py): a call's cost is in jobs, exchanges and Python task
+waves, not documents. tfidf_topk stays a JVM plan: a per-doc form (tf
+pass, df aggregate, join, window) measured 1.67 s per 200-doc call
+against 0.84 s for the JVM plan on a 4-core host.
+
 Deterministic ordering everywhere: score DESC then candidate/term ASC
 (SURVEY §2.7 W4 — Spark sort is not stable, ties must be explicit).
 """
 
 from __future__ import annotations
 
+from itertools import groupby
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._cache import cache_latest
-
 from ..tokenizer import (TEXT_STOPWORDS, duckdb_toks_cte, sql_str_list,
                          tokens_exploded)
+from .perdoc import jvm_log2, per_doc_rows, round6_half_up
 
 KP_LASF = 2       # pke default 3, scaled to the short testdata docs
 KP_CUTOFF = 40    # pke default 400, scaled likewise
@@ -35,6 +42,7 @@ KP_SIGMA = 3.0
 MAX_WORDS = 5     # F1: > 5 words -> drop
 MIN_CHARS = 3     # F1: total chars < 3 -> drop
 MIN_WORD_LEN = 2  # F1: any word < 2 chars -> drop
+KP_POOL = 50      # kpminer_dedup walks each doc's 50 best (pke: all)
 
 
 # ---------------------------------------------------------------- Spark
@@ -43,74 +51,44 @@ _CAND_SCHEMA = ("doc_id long, candidate string, tf long, "
                 "first_offset long, n_words long")
 
 
-def _runs_row_fn(stoplist: tuple[str, ...]):
+def _runs(terms: list, stop: frozenset) -> dict:
     """Per-doc core of candidate_runs: maximal non-stopword runs over
-    the document's own token list, grouped by phrase with
-    (tf, min start pos, n_words), F1-filtered. Positions are 1-based
-    (the tokens_exploded convention)."""
-    stop = frozenset(stoplist)
-
-    def fn(did: int, terms: list) -> list:
-        out: dict = {}
-        i, length = 0, len(terms)
-        while i < length:
-            if terms[i] in stop:
-                i += 1
-                continue
-            j = i
-            while j < length and terms[j] not in stop:
-                j += 1
-            words = terms[i:j]
-            n_words = j - i
-            # F1 depends only on the phrase string, so filtering before
-            # the group-by equals the DataFrame plan's filter after it
-            if (n_words <= MAX_WORDS
-                    and sum(map(len, words)) >= MIN_CHARS
-                    and min(map(len, words)) >= MIN_WORD_LEN):
-                cand = " ".join(words)
-                e = out.get(cand)
-                if e is None:
-                    # i ascends, so the first sighting IS min(start_pos)
-                    out[cand] = [1, i + 1, n_words]
-                else:
-                    e[0] += 1
-            i = j
-        return [(did, c, tf, fo, nw) for c, (tf, fo, nw) in out.items()]
-
-    return fn
+    the document's own token list, grouped by phrase as
+    ``{candidate: [tf, first_offset, n_words]}``, F1-filtered.
+    Positions are 1-based (the tokens_exploded convention)."""
+    out: dict = {}
+    pos = 1
+    for is_stop, run in groupby(terms, stop.__contains__):
+        words = list(run)
+        # F1 depends only on the phrase string, so filtering before
+        # the group-by equals the DataFrame plan's filter after it
+        if (not is_stop and len(words) <= MAX_WORDS
+                and sum(map(len, words)) >= MIN_CHARS
+                and min(map(len, words)) >= MIN_WORD_LEN):
+            # pos ascends, so the first sighting IS min(start_pos)
+            out.setdefault(" ".join(words), [0, pos, len(words)])[0] += 1
+        pos += len(words)
+    return out
 
 
-def _ngram_row_fn(n: int, stoplist: tuple[str, ...]):
+def _ngrams(terms: list, n: int, stop: frozenset) -> dict:
     """Per-doc core of ngram_candidates: every 1..n-gram whose words
-    all pass the stoplist/length gates, grouped by phrase."""
-    stop = frozenset(stoplist)
-
-    def fn(did: int, terms: list) -> list:
-        length = len(terms)
-        ok = [len(t) >= MIN_WORD_LEN and t not in stop for t in terms]
-        lens = [len(t) for t in terms]
-        out: dict = {}
-        for i in range(length):
-            if not ok[i]:
-                continue
-            chars = 0
-            for size in range(1, n + 1):
-                j = i + size - 1
-                if j >= length or not ok[j]:
-                    # a failing word poisons every longer gram from i
-                    break
-                chars += lens[j]
-                if chars < MIN_CHARS:
-                    continue
-                cand = " ".join(terms[i:j + 1])
-                e = out.get(cand)
-                if e is None:
-                    out[cand] = [1, i + 1, size]
-                else:
-                    e[0] += 1
-        return [(did, c, tf, fo, nw) for c, (tf, fo, nw) in out.items()]
-
-    return fn
+    all pass the stoplist/length gates, grouped by phrase as
+    ``{candidate: [tf, first_offset, n_words]}``."""
+    length = len(terms)
+    ok = [len(t) >= MIN_WORD_LEN and t not in stop for t in terms]
+    out: dict = {}
+    for i in range(length):
+        chars = 0
+        for j in range(i, min(i + n, length)):
+            if not ok[j]:
+                # a failing word poisons every longer gram from i
+                break
+            chars += len(terms[j])
+            if chars >= MIN_CHARS:
+                out.setdefault(" ".join(terms[i:j + 1]),
+                               [0, i + 1, j - i + 1])[0] += 1
+    return out
 
 
 def candidate_runs(docs: DataFrame,
@@ -126,8 +104,11 @@ def candidate_runs(docs: DataFrame,
     but unused: the pass reads the doc rows directly.
     """
     del toks  # per-doc pass tokenizes inline (lockstep tokenizer)
-    from .perdoc import per_doc_rows
-    return per_doc_rows(docs, _runs_row_fn(stoplist), _CAND_SCHEMA)
+    stop = frozenset(stoplist)
+    return per_doc_rows(
+        docs, lambda did, terms: [(did, c, *e) for c, e in
+                                  _runs(terms, stop).items()],
+        _CAND_SCHEMA)
 
 
 def ngram_candidates(docs: DataFrame, n: int = 3,
@@ -143,8 +124,11 @@ def ngram_candidates(docs: DataFrame, n: int = 3,
     this form); grams of a doc never cross documents, so none of that
     movement was needed."""
     del toks  # per-doc pass tokenizes inline (lockstep tokenizer)
-    from .perdoc import per_doc_rows
-    return per_doc_rows(docs, _ngram_row_fn(n, stoplist), _CAND_SCHEMA)
+    stop = frozenset(stoplist)
+    return per_doc_rows(
+        docs, lambda did, terms: [(did, c, *e) for c, e in
+                                  _ngrams(terms, n, stop).items()],
+        _CAND_SCHEMA)
 
 
 def _ngrams_cte(n: int = 3, stoplist: tuple[str, ...] = TEXT_STOPWORDS) -> str:
@@ -176,13 +160,17 @@ ngrams AS (
 
 def firstphrases(docs: DataFrame, k: int = 5,
                  stoplist: tuple[str, ...] = TEXT_STOPWORDS) -> DataFrame:
-    """Per-doc top-k candidates by first occurrence (FirstPhrases)."""
-    c = candidate_runs(docs, stoplist)
-    w = Window.partitionBy("doc_id").orderBy(
-        F.asc("first_offset"), F.asc("candidate"))
-    return (c.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("doc_id", "rank", "candidate", "first_offset"))
+    """Per-doc top-k candidates by first occurrence (FirstPhrases),
+    ranked inside the candidate_runs pass: no window exchange."""
+    stop = frozenset(stoplist)
+
+    def fn(did: int, terms: list) -> list:
+        top = sorted((e[1], c) for c, e in _runs(terms, stop).items())
+        return [(did, rank, c, fo)
+                for rank, (fo, c) in enumerate(top[:max(k, 0)], start=1)]
+
+    return per_doc_rows(docs, fn, "doc_id long, rank int, candidate string, "
+                        "first_offset long")
 
 
 def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -190,7 +178,9 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
 
     N comes from a broadcast 1-row aggregate inside the plan — no
     separate ``docs.count()`` driver job per query (A2: in index-backed
-    deployments it reads from the manifest)."""
+    deployments it reads from the manifest). Kept as a JVM plan: the
+    per-doc form (tf pass, df aggregate, join, window) measured slower,
+    1.67 s against 0.84 s per 200-doc call on a 4-core host."""
     toks = tokens_exploded(docs)
     tc = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     stats = tc.groupBy("term").agg(F.count("*").alias("df"))
@@ -206,100 +196,126 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
             .select("doc_id", "rank", "term", "tf", "weight"))
 
 
+def kp_weight(tf: int, n_words: int, idf: float, n_d: int, p_d: int,
+              alpha: float = KP_ALPHA, sigma: float = KP_SIGMA) -> float:
+    """One candidate's KPMiner weight, the double Spark's Column
+    expression ``F.round(tf * log2(...), 6)`` gives (same operation
+    order; ``idf`` from ``jvm_log2``): unigrams ``tf * idf``, multiword
+    ``tf * min(N_d / (P_d * alpha), sigma) * idf``."""
+    if n_words == 1:
+        return round6_half_up(tf * idf)
+    return round6_half_up(tf * min(n_d / (p_d * alpha), sigma) * idf)
+
+
+def nonredundant(cands: list[str], k: int) -> list[int]:
+    """pke ``get_n_best(redundancy_removal=True)`` (base.py:129-206) on
+    one doc's candidates in rank order: the indices of the first k that
+    are not a contiguous token subsequence of an already-SELECTED one."""
+    kept: list[list[str]] = []
+    out: list[int] = []
+    for i, cand in enumerate(cands):
+        if len(out) >= k:
+            break
+        toks = cand.split(" ")
+        n = len(toks)
+        if not any(toks == prev[j:j + n]
+                   for prev in kept for j in range(len(prev) - n + 1)):
+            kept.append(toks)
+            out.append(i)
+    return out
+
+
+def _kpminer(docs: DataFrame, k: int, stoplist: tuple[str, ...],
+             lasf: int, cutoff: int, alpha: float, sigma: float,
+             pool: int | None) -> DataFrame:
+    """Two per-doc passes around one aggregate, run at call time: pass 1
+    emits each doc's unigram candidates plus a null marker, so one
+    groupBy gives the batch's unigram df and N. That table reaches pass
+    2 as a dict in its closure (pke's ``load_document_frequency_file``
+    dict; PySpark broadcasts a command over 1 MB). Pass 2 scores, ranks
+    and, given a ``pool``, walks ``nonredundant`` over its top."""
+    stop = frozenset(stoplist)
+
+    def cands(terms: list) -> dict:
+        return {c: e for c, e in _ngrams(terms, 3, stop).items()
+                if e[1] <= cutoff and e[0] >= lasf}
+
+    def unigrams(did: int, terms: list) -> list:
+        return [(None,)] + [(c,) for c, e in cands(terms).items()
+                            if e[2] == 1]
+
+    df = dict(per_doc_rows(docs, unigrams, "candidate string")
+              .groupBy("candidate").count().collect())
+    n1 = df.pop(None, 0) + 1.0
+    # one log per distinct df. df 0 (the twin's coalesce for an absent
+    # unigram) gives log2(N + 1), which is also the multiword idf
+    log2 = jvm_log2(docs.sparkSession)
+    idf = {d: log2(n1 / (1.0 + d)) for d in {0, *df.values()}}
+
+    def rank(did: int, terms: list) -> list:
+        cs = cands(terms)
+        n_d = sum(e[0] for e in cs.values())
+        p_d = max(1, sum(e[0] for e in cs.values() if e[2] > 1))
+        scored = sorted(
+            (-kp_weight(tf, nw, idf[df.get(c, 0) if nw == 1 else 0],
+                        n_d, p_d, alpha, sigma), c, tf)
+            for c, (tf, _fo, nw) in cs.items())
+        if pool is None:
+            return [(did, r, c, tf, -w) for r, (w, c, tf)
+                    in enumerate(scored[:max(k, 0)], start=1)]
+        top = scored[:pool]
+        return [(did, r, top[i][1], -top[i][0]) for r, i in
+                enumerate(nonredundant([c for _w, c, _tf in top], k),
+                          start=1)]
+
+    schema = ("doc_id long, rank int, candidate string, tf long, "
+              "weight double" if pool is None else
+              "doc_id long, rank int, candidate string, weight double")
+    return per_doc_rows(docs, rank, schema)
+
+
 def kpminer(docs: DataFrame, k: int = 5,
             stoplist: tuple[str, ...] = TEXT_STOPWORDS,
             lasf: int = KP_LASF, cutoff: int = KP_CUTOFF,
             alpha: float = KP_ALPHA, sigma: float = KP_SIGMA) -> DataFrame:
     """Per-doc top-k KPMiner-weighted candidates (see module docstring).
     Candidates are 1..3-grams (pke uses ngram_selection(n=5),
-    kpminer.py:73) filtered by lasf/cutoff."""
-    nrow = docs.agg(F.count("*").cast("double").alias("n"))
-    c = (ngram_candidates(docs, 3, stoplist)
-         .filter((F.col("first_offset") <= cutoff) & (F.col("tf") >= lasf)))
-    # per-doc scalars N_d, P_d (A4) as windows over the candidate table
-    # — a groupBy+join-back would re-evaluate the whole candidate DAG
-    wd = Window.partitionBy("doc_id")
-    c = (c.withColumn("n_d", F.sum("tf").over(wd))
-         .withColumn("p_d", F.greatest(
-             F.lit(1), F.sum(F.when(F.col("n_words") > 1, F.col("tf"))
-                             .otherwise(F.lit(0))).over(wd)))
-         # materialize once (lazy): both uni_df and the weighted join
-         # consume this table — without the checkpoint the whole
-         # ngram-candidate DAG (scan + window + explode) re-runs per
-         # consumer
-         .localCheckpoint(eager=False))
-    # df stats over single-word candidates only (kpminer df lookup is
-    # unigram-only; multiword candidate_df = 1)
-    uni_df = (c.filter(F.col("n_words") == 1)
-              .groupBy("candidate").agg(F.count("*").alias("df")))
-    boost = F.least(F.col("n_d") / (F.col("p_d") * alpha), F.lit(sigma))
-    n1 = F.col("n") + 1.0
-    idf = F.when(F.col("n_words") == 1,
-                 F.log2(n1 / (1.0 + F.coalesce(F.col("df"), F.lit(0))))) \
-           .otherwise(F.log2(n1))
-    weight = F.round(
-        F.when(F.col("n_words") == 1, F.col("tf") * idf)
-        .otherwise(F.col("tf") * boost * idf), 6)
-    w = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("candidate"))
-    return (c.join(uni_df, "candidate", "left")
-            .crossJoin(F.broadcast(nrow))
-            .withColumn("weight", weight)
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-            .select("doc_id", "rank", "candidate", "tf", "weight"))
+    kpminer.py:73) filtered by lasf/cutoff.
+
+    Eager: the unigram df and N aggregate runs when this is called
+    (see ``_kpminer``); the returned ranking is one lazy per-doc pass."""
+    return _kpminer(docs, k, stoplist, lasf, cutoff, alpha, sigma, None)
 
 
 def redundancy_topk(ranked: DataFrame, k: int = 5,
                     weight_col: str = "weight") -> DataFrame:
-    """pke ``get_n_best(redundancy_removal=True)`` (base.py:129-206):
-    per doc, walk candidates in (weight DESC, candidate ASC) order and
-    greedily drop any whose token sequence is a contiguous subsequence
-    of an already-SELECTED candidate; stop at k. Sequential greedy per
-    doc -> applyInPandas; the corpus stays parallel (SURVEY §7.3)."""
+    """pke ``get_n_best(redundancy_removal=True)`` over a ranked
+    (doc_id, candidate, weight) table: per doc, ``nonredundant`` in
+    (weight DESC, candidate ASC) order. The walk is sequential per doc
+    -> applyInPandas; the corpus stays parallel (SURVEY §7.3)."""
     import pandas as pd
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([weight_col, "candidate"],
                               ascending=[False, True], kind="mergesort")
-        kept: list[list[str]] = []
-        rows = []
-        for r in pdf.itertuples(index=False):
-            toks = r.candidate.split(" ")
-            n = len(toks)
-            redundant = any(
-                toks == prev[i:i + n]
-                for prev in kept for i in range(len(prev) - n + 1))
-            if redundant:
-                continue
-            kept.append(toks)
-            rows.append((int(r.doc_id), len(kept), r.candidate,
-                         float(getattr(r, weight_col))))
-            if len(kept) >= k:
-                break
-        return pd.DataFrame(rows, columns=["doc_id", "rank", "candidate",
-                                           "weight"])
+        top = pdf.iloc[nonredundant(pdf["candidate"].tolist(), k)]
+        return top.assign(rank=range(1, len(top) + 1)).rename(
+            columns={weight_col: "weight"})
 
     return ranked.select("doc_id", "candidate", weight_col) \
         .groupBy("doc_id").applyInPandas(
             fn, "doc_id long, rank int, candidate string, weight double")
 
 
-# most recent kpminer_dedup candidate pool; kept cached for that lazy
-# result's lifetime, unpersisted on the next call (one cached copy max)
-_LAST_POOL: list = []
-
-
 def kpminer_dedup(docs: DataFrame, k: int = 5,
                   stoplist: tuple[str, ...] = TEXT_STOPWORDS) -> DataFrame:
-    """KPMiner ranking with greedy redundancy removal (T1).
+    """KPMiner ranking with greedy redundancy removal (T1) over each
+    doc's top-``KP_POOL`` candidates, all inside kpminer's ranking
+    pass: no window, no join, no cached pool.
 
-    The 50-per-doc candidate pool is cached: without materialization
-    Spark re-evaluates the whole KPMiner DAG on the far side of the
-    greedy pass's exchange (interleaved A/B: cache 4.3 s vs plain
-    14.6 s vs localCheckpoint 19.9 s at sf0.1). The pool is tiny
-    (<= 50 rows/doc)."""
-    full = cache_latest(kpminer(docs, k=50, stoplist=stoplist), _LAST_POOL)
-    return redundancy_topk(full, k)
+    Eager like ``kpminer``: the df aggregate runs when this is called."""
+    return _kpminer(docs, k, stoplist, KP_LASF, KP_CUTOFF, KP_ALPHA,
+                    KP_SIGMA, KP_POOL)
 
 
 def bigrams(docs: DataFrame) -> DataFrame:

@@ -1,29 +1,25 @@
 """Per-document ranking executor: tokenize inside the map pass.
 
-The graph/topic family's previous physical plan was
-``tokens_exploded -> Exchange(hash doc_id) -> applyInPandas(doc fn)``:
-a JVM tokenize + posexplode of the corpus, a shuffle of every token
-row, and a per-GROUP Arrow<->pandas conversion (one tiny frame per
-document). A document's token sequence is derivable from its own row,
-so this executor tokenizes inside the SAME Python pass that ranks
-(``tokenize_series``, the pandas member of the lockstep tokenizer
-quartet) and builds ONE output frame per Arrow batch instead of per
-document — guide §2.3 (ship the text once, not its exploded tokens)
-plus §4 (amortize the Python boundary over batches).
+A document's token sequence is derivable from its own row, so the
+Python pass that ranks also tokenizes (``tokenize_series``, the pandas
+member of the lockstep tokenizer quartet) and builds ONE output frame
+per Arrow batch: no token-row shuffle, no per-group frames (guide §2.3
+ship the text once, §4 amortize the Python boundary over batches).
 
-The one remaining exchange is a hash repartition of the
-(doc_id, text) rows. It exists to spread the Python work across cores
-even when the input scan has few splits (a sub-4MB parquet file is a
-single split under the openCost packing rule, which would serialize
-the whole pass), and it moves strictly fewer bytes than the token-row
-shuffle it replaces. The partition count is EXPLICIT —
-max(spark.sql.shuffle.partitions, input scan splits) — because AQE's
-byte-based coalescing is exactly wrong for this stage: the per-doc
-ranking cost is proportional to documents, not bytes, so coalescing a
-sub-MB text shuffle back to one partition (measured: yake_full 9.3s
--> 1.5s once pinned) serializes minutes of Python behind a
-kilobyte-sized heuristic. Both inputs of the max scale with the
-session/cluster, not with this sandbox.
+A call runs ONE wave of Python tasks, one per task slot
+(``defaultParallelism``), and no doc exchange it does not need. A
+Python task's cost is mostly fixed: on a 4-core host a task over a
+200-doc batch ran 200-350 ms while its UDF body took about 2 ms (the
+first UDF call comes about 225 ms after launch, then the daemon's
+``gc.collect()`` after each reused-worker task takes 45-50 ms). So an
+input with at least as many splits as slots is used as it is; one
+with fewer (a sub-4MB parquet file is ONE split under the openCost
+rule) is hash-repartitioned by doc_id to exactly the slot count.
+``spark.sql.shuffle.partitions`` is the wrong count (at 8 on 4 slots
+every call paid an exchange and two task waves), and so is AQE's
+byte-based coalescing: the cost is per document, not per byte
+(yake_full: 9.3 s coalesced to one partition, 1.5 s pinned). Both
+counts are properties of the input and the session: there is no knob.
 
 ``row_fn(doc_id, terms) -> list[tuple]`` receives the document's term
 sequence (positions are implicitly the dense 1-based token order, the
@@ -34,29 +30,55 @@ nothing, matching the old groupBy semantics for token-less docs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from decimal import ROUND_HALF_UP, Decimal
+
+from pyspark.sql import DataFrame, SparkSession
 
 _DTYPES = {"long": "int64", "int": "int32",
            "double": "float64", "string": "object",
            "array<long>": "object"}
 
 
+def round6_half_up(x: float) -> float:
+    """Spark's ``F.round(x, 6)`` for passes that rank on a rounded
+    weight: Spark takes the digits of ``Double.toString`` and rounds
+    HALF_UP. ``repr`` gives the shortest round-trip digits, as
+    ``Double.toString`` does from JDK 19; older JVMs can emit extra
+    digits and round a boundary value differently, so
+    ``tests/test_yake_lite.py`` pins it per input on its JVM."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
+                                           rounding=ROUND_HALF_UP))
+
+
+def jvm_log2(spark: SparkSession):
+    """Spark's ``F.log2`` on the driver, one py4j call per value:
+    ``Log2`` is ``StrictMath.log(x) / StrictMath.log(2)``, and CPython's
+    ``math.log`` (the C library's) differs from StrictMath in the last
+    bit for about 2% of inputs (7910 of 380k measured with glibc),
+    enough to move a 6-decimal rounding boundary."""
+    log = spark.sparkContext._jvm.java.lang.StrictMath.log
+    ln2 = log(2.0)
+    return lambda x: log(x) / ln2
+
+
 def spread_docs(docs: DataFrame, cols=("doc_id", "text")) -> DataFrame:
-    """Hash-repartition the doc rows with an EXPLICIT partition count
-    (see module docstring) so a compute-bound Python pass never
-    serializes behind AQE's byte-based coalescing."""
-    spark = docs.sparkSession
-    n = max(int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            docs.rdd.getNumPartitions())
-    return docs.select(*cols).repartition(n, "doc_id")
+    """The doc rows as they are when the input already has a split per
+    task slot, else hash-repartitioned by doc_id to exactly the slot
+    count (see module docstring)."""
+    # the route's data: the input's splits against the session's slots
+    splits = docs.rdd.getNumPartitions()
+    slots = docs.sparkSession.sparkContext.defaultParallelism
+    out = docs.select(*cols)
+    return out if splits >= slots else out.repartition(slots, "doc_id")
 
 
 def per_doc_rows(docs: DataFrame, row_fn, schema: str,
-                 profile: str = "code",
+                 profile: str | None = "code",
                  extra_cols: tuple = ()) -> DataFrame:
     """``extra_cols``: additional per-doc input columns forwarded to
     ``row_fn(doc_id, terms, *extras)`` (e.g. TPR's per-doc topic
-    distribution)."""
+    distribution). ``profile=None`` passes the raw text instead of its
+    terms (yake_full splits its own sentences)."""
     import pandas as pd
 
     from ..tokenizer import tokenize_series
@@ -67,7 +89,8 @@ def per_doc_rows(docs: DataFrame, row_fn, schema: str,
 
     def gen(pdf_iter):
         for pdf in pdf_iter:
-            toks = tokenize_series(pdf["text"], profile)
+            toks = (tokenize_series(pdf["text"], profile) if profile
+                    else pdf["text"])
             rows: list[tuple] = []
             for did, tl, *extras in zip(pdf["doc_id"], toks,
                                         *[pdf[c] for c in extra_cols]):

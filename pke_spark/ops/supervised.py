@@ -74,7 +74,7 @@ def kea_fit_predict(docs: DataFrame, k: int = 5,
                           outputCol="features")
     # cached: fit() is an action over the whole feature DAG and the
     # returned ranking would re-evaluate it; one cached copy, previous
-    # unpersisted per call (shared helper, same pattern as kpminer_dedup)
+    # unpersisted per call (shared helper, ops/_cache.py)
     vec = cache_latest(asm.transform(labeled), _LAST_VEC)
     # multinomial NB needs non-negative features; both are >= 0
     model = NaiveBayes(smoothing=1.0, modelType="multinomial",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 
 from ..tokenizer import TEXT_STOPWORDS
 from .graph import _pagerank_dense
+from .perdoc import per_doc_rows
 
 THRESHOLD = 0.74
 ALPHA = 0.85
@@ -180,7 +181,6 @@ def _topicrank_doc(pdf: pd.DataFrame, stopset: set, k: int,
 def topicrank_topk(docs: DataFrame, k: int = 5,
                    stoplist: tuple[str, ...] = TEXT_STOPWORDS,
                    threshold: float = THRESHOLD) -> DataFrame:
-    from .perdoc import per_doc_rows
     stopset = set(stoplist)
 
     def row_fn(doc_id: int, terms: list[str]) -> list[tuple]:
@@ -286,7 +286,6 @@ def multipartiterank_topk(docs: DataFrame, k: int = 5,
                           stoplist: tuple[str, ...] = TEXT_STOPWORDS,
                           threshold: float = THRESHOLD,
                           alpha: float = 1.1) -> DataFrame:
-    from .perdoc import per_doc_rows
     stopset = set(stoplist)
 
     def row_fn(doc_id: int, terms: list[str]) -> list[tuple]:

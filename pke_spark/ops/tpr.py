@@ -60,9 +60,10 @@ def _stop_filtered_words(docs: DataFrame,
     # (and CountVectorizer tie order) depends on the data layout, so a
     # layout pinned to hash(doc_id)%8 makes the trained model — and the
     # frozen golden built from it — identical at local[8] and local[32].
+    # null text is a doc with no words (CountVectorizer rejects a null)
+    words = tokens_array(F.coalesce(F.col("text"), F.lit("")))
     return (docs.select(
-        "doc_id",
-        F.array_except(tokens_array("text"), stop_arr).alias("words"))
+        "doc_id", F.array_except(words, stop_arr).alias("words"))
         .repartition(8, "doc_id"))
 
 

@@ -26,25 +26,10 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..tokenizer import TEXT_STOPWORDS, duckdb_toks_cte
-
-
-def _round6_half_up(x: float) -> float:
-    """Replica of Spark's ``F.round(x, 6)``: Spark rounds via
-    ``BigDecimal.valueOf(double)``, i.e. the digits of
-    ``Double.toString``, then ``setScale(6, HALF_UP)``. This starts from
-    CPython's ``repr`` (the SHORTEST round-trip digits), so it is
-    bit-exact only on JVMs whose ``Double.toString`` also gives the
-    shortest round-trip digits (JDK 19+); older JVMs can emit extra
-    digits and round a boundary value differently.
-    ``tests/test_yake_lite.py`` pins it per input on the JVM it runs
-    on."""
-    from decimal import ROUND_HALF_UP, Decimal
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
-                                           rounding=ROUND_HALF_UP))
+from .perdoc import per_doc_rows, round6_half_up
 
 
 def _yake_lite_doc(k: int):
@@ -85,8 +70,8 @@ def _yake_lite_doc(k: int):
             position = _m.log(_m.log(3.0 + med))
             frequency = tf / denom_tf
             spread = (p[-1] - p[0] + 1.0) / doc_len
-            out.append((t, tf, _round6_half_up(position
-                                               / (frequency + spread))))
+            out.append((t, tf, round6_half_up(position
+                                              / (frequency + spread))))
         out.sort(key=lambda r: (r[2], r[0]))
         return [(doc_id, rank, t, tf, wt)
                 for rank, (t, tf, wt) in enumerate(out[:max(k, 0)], start=1)]
@@ -95,7 +80,6 @@ def _yake_lite_doc(k: int):
 
 
 def yake_lite(docs: DataFrame, k: int = 5) -> DataFrame:
-    from .perdoc import per_doc_rows
     return per_doc_rows(
         docs, _yake_lite_doc(k),
         "doc_id long, rank int, term string, tf long, weight double")
@@ -351,25 +335,13 @@ def yake_doc(sentences: list[list[str]], stopset: set, k: int,
 def yake_full(docs: DataFrame, k: int = 5,
               stoplist: tuple[str, ...] = TEXT_STOPWORDS,
               window: int = YAKE_WINDOW) -> DataFrame:
-    """(doc_id, rank, candidate, weight) — full YAKE per document,
-    shuffle-free (mapInPandas over the documents scan; docs are
-    independent, no groupBy needed)."""
+    """(doc_id, rank, candidate, weight) — full YAKE per document in
+    one per-doc pass over the raw text (it splits its own sentences)."""
     stopset = set(stoplist)
 
-    def fn(pdf_iter):
-        for pdf in pdf_iter:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                top = yake_doc(yake_sentences(r.text), stopset, k, window)
-                rows += [(int(r.doc_id), i + 1, c, w)
-                         for i, (c, w) in enumerate(top)]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "rank", "candidate", "weight"])
+    def row_fn(did: int, text: str) -> list:
+        top = yake_doc(yake_sentences(text), stopset, k, window)
+        return [(did, i + 1, c, w) for i, (c, w) in enumerate(top)]
 
-    # spread_docs: the Python per-doc work must spread across cores even
-    # when the input scan has few splits (a sub-4MB parquet file packs
-    # into ONE split under the openCost rule, which serialized this
-    # whole pass at ~9s; pinned explicit partitioning runs it in ~1.5s)
-    from .perdoc import spread_docs
-    return spread_docs(docs).mapInPandas(
-        fn, "doc_id long, rank int, candidate string, weight double")
+    return per_doc_rows(docs, row_fn, "doc_id long, rank int, "
+                        "candidate string, weight double", profile=None)

@@ -99,13 +99,43 @@ def _mirror_kpminer_dedup(texts, k=5, lasf=2, cutoff=40,
     return rows
 
 
-def test_kpminer_dedup_independent_mirror(docs, texts):
+def _assert_kpminer_dedup_matches(docs, texts, k=5):
     got = sorted((r.doc_id, r.rank, r.candidate, r.weight)
-                 for r in keyphrase.kpminer_dedup(docs, 5).collect())
-    want = sorted(_mirror_kpminer_dedup(texts, 5))
+                 for r in keyphrase.kpminer_dedup(docs, k).collect())
+    want = sorted(_mirror_kpminer_dedup(texts, k))
     assert [g[:3] for g in got] == [w[:3] for w in want]
     np.testing.assert_allclose([g[3] for g in got], [w[3] for w in want],
                                atol=1e-6)
+
+
+def test_kpminer_dedup_independent_mirror(docs, texts):
+    _assert_kpminer_dedup_matches(docs, texts)
+
+
+def test_kpminer_dedup_mirror_on_spread_input(spark, texts):
+    """The same parity on an input with a split per task slot, the
+    per-doc route with no doc exchange (the fixture's limit() input
+    takes the repartition route)."""
+    docs = spark.createDataFrame(sorted(texts.items()),
+                                 "doc_id long, text string")
+    slots = spark.sparkContext.defaultParallelism
+    assert docs.rdd.getNumPartitions() >= slots
+    _assert_kpminer_dedup_matches(docs, texts)
+
+
+def test_kpminer_dedup_reads_a_50_candidate_pool(spark):
+    """40 distinct words said twice give 77 tied multiword candidates.
+    Their alphabetical walk keeps the first bigram and then every
+    trigram, dropping the bigram between two trigrams, so the 50 best
+    hold 26 keepers: k=30 returns 26 rows, where a walk over every
+    candidate would return 30."""
+    words = ["q" + chr(97 + i // 26) + chr(97 + i % 26) for i in range(40)]
+    texts = {7: " ".join(words * 2)}
+    assert len(_mirror_kpminer_dedup(texts, 30, pool=10**6)) == 30
+    docs = spark.createDataFrame(list(texts.items()),
+                                 "doc_id long, text string")
+    _assert_kpminer_dedup_matches(docs, texts, k=30)
+    assert keyphrase.kpminer_dedup(docs, 30).count() == 26
 
 
 def _nb_multinomial(X, y, smoothing=1.0):

@@ -1,14 +1,18 @@
-"""k <= 0 returns zero rows from every per-doc ranker, as the SQL twins'
-``rank <= k`` filter does (a Python ``[:k]`` slice with k < 0 would keep
-all but |k| candidates)."""
+"""Edge inputs through every per-doc ranker: k <= 0 returns zero rows,
+as the SQL twins' ``rank <= k`` filter does (a Python ``[:k]`` slice
+with k < 0 would keep all but |k| candidates), and a row with null or
+empty text ranks nothing and breaks nothing."""
 
 from __future__ import annotations
 
 import pytest
 
-from pke_spark.ops import graph, topicrank, tpr, yake
+from pke_spark.ops import graph, keyphrase, topicrank, tpr, yake
 
 RANKERS = {
+    "firstphrases": keyphrase.firstphrases,
+    "kpminer": keyphrase.kpminer,
+    "kpminer_dedup": keyphrase.kpminer_dedup,
     "yake_lite": yake.yake_lite,
     "textrank_topk": graph.textrank_topk,
     "textrank_top_percent": graph.textrank_top_percent,
@@ -29,3 +33,12 @@ def docs(spark, sf_dir):
 def test_nonpositive_k_returns_no_rows(docs, name, k):
     assert RANKERS[name](docs, 5).count() > 0  # the docs do rank
     assert RANKERS[name](docs, k).count() == 0
+
+
+@pytest.mark.parametrize("name", sorted(RANKERS))
+def test_null_and_empty_text_rank_nothing(spark, docs, name):
+    blank = spark.createDataFrame(
+        [(-1, None, None, None, None), (-2, "", None, None, 0)], docs.schema)
+    out = RANKERS[name](docs.unionByName(blank), 5).toPandas()
+    assert len(out) > 0
+    assert not out["doc_id"].isin([-1, -2]).any()

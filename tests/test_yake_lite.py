@@ -16,7 +16,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pke_spark.ops.yake import _round6_half_up, yake_lite, yake_lite_sql
+from pke_spark.ops.perdoc import round6_half_up
+from pke_spark.ops.yake import yake_lite, yake_lite_sql
 
 # values chosen to sit at/near 6-decimal rounding boundaries, plus
 # generic irrationals of the kind the weight formula produces
@@ -41,7 +42,7 @@ def test_round6_half_up_matches_spark_round(spark):
            .collect()}
     assert len(got) == len(ROUND_CASES)
     for i, v in enumerate(ROUND_CASES):
-        assert got[i] == _round6_half_up(v), (i, v, got[i])
+        assert got[i] == round6_half_up(v), (i, v, got[i])
 
 
 def test_yake_lite_matches_duckdb_oracle(spark, sf_dir):
