@@ -71,10 +71,6 @@ POSTINGS_SCHEMA = StructType([
     StructField("blocks", ArrayType(BLOCK_STRUCT)),
 ])
 
-MANIFEST_SCHEMA = ("build_id string, phase string, part int, status string, "
-                   "doc_count long, term_count long, bytes long, "
-                   "input_snapshot string, ts double")
-
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -1290,14 +1286,12 @@ class IndexReader:
 
     def _read_row_group(self, f, g: int, columns: list[str]):
         """``columns`` of row group ``g`` of postings file ``f`` (one
-        open, one single-threaded read, one close).
-
-        Serving reads allocate from the system allocator, not Arrow's
-        default jemalloc pool: every miss allocates and frees a few
-        small buffers, and jemalloc keeps freed pages resident for its
-        decay time — on the 6k-doc benchmark index (4-core host) that
-        held driver peak RSS about 3.5 MB (1.5%) higher. The pool is
-        chosen per call, so no process-wide Arrow setting changes."""
+        open, one single-threaded read, one close): every dictionary,
+        postings and expansion read. These reads, and the kernels over
+        them, use the system allocator, not Arrow's jemalloc pool, which
+        keeps the freed pages of every miss resident for its decay time
+        (+3.5 MB, 1.5%, driver peak RSS on the 6k-doc benchmark index,
+        4-core host). The pool is passed per call, never set globally."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         reader = pq.ParquetReader(memory_pool=pa.system_memory_pool())
@@ -1337,22 +1331,6 @@ class IndexReader:
                             memory_pool=pool)
             yield from zip(hit.column("term").to_pylist(),
                            hit.column(column).to_pylist())
-
-    def dictionary_range(self, lo: str, hi: str | None):
-        """``(term, df)`` postings rows of the row groups whose term
-        range can hold a term in [lo, hi) — a superset the caller
-        filters; the dictionary expansions run their SQL over it. A
-        stream read one row group at a time as its consumer pulls: an
-        unbounded range (a regex with no literal prefix) covers the
-        whole dictionary, of which the driver holds only the consumer's
-        read-ahead (DuckDB's Arrow scan buffers a few dozen batches)."""
-        import pyarrow as pa
-        schema = pa.schema([("term", pa.string()), ("df", pa.int64())])
-        return pa.RecordBatchReader.from_batches(schema, (
-            batch
-            for tbl in self._read_rows(self._row_groups_in(lo, hi),
-                                       ["term", "df"])
-            for batch in tbl.to_batches()))
 
     # per-term dictionary cache bound: ~100k entries is a few MB on the
     # driver regardless of corpus vocabulary size
@@ -1488,13 +1466,13 @@ class IndexReader:
         return arr
 
     # DuckDB worker threads for the reader's connection. One: it serves
-    # one client's small reads (docmap load, metadata filters, the
-    # expansion SQL over already-pruned dictionary rows), and each extra
-    # worker keeps its own allocator arenas resident — on a 6k-doc
-    # dense index (4-core host) the default four workers held driver
-    # peak RSS 16-18 MB (7-8%) above one worker, at the same warm query
-    # latency. Dictionary and postings misses do not run here: they
-    # read their candidate row groups with pyarrow (_read_rows).
+    # one client's small reads (docmap load, metadata filters, sort,
+    # facets, more-like-this), and each extra worker keeps its own
+    # allocator arenas resident — on a 6k-doc dense index (4-core host)
+    # the default four workers held driver peak RSS 16-18 MB (7-8%)
+    # above one worker, at the same warm query latency. Dictionary and
+    # postings misses and the expansions never run here: they read their
+    # candidate row groups with pyarrow (_read_rows).
     READER_DUCKDB_THREADS = 1
 
     def _duckdb(self):
@@ -1514,12 +1492,6 @@ class IndexReader:
         resolution, a reader serves the live set it saw at
         construction; deletes issued later need a new reader."""
         return self._tomb
-
-    def doc_stats(self) -> DataFrame:
-        """(doc_id, dl) derived from segments (norms are embedded in the
-        posting blocks, so this is for diagnostics only)."""
-        return (self.spark.read.parquet(f"{self.index_dir}/segments")
-                .groupBy("doc_id").agg(F.sum("tf").alias("dl")))
 
     def term_postings(self, terms: list[str]) -> DataFrame:
         # predicate pushdown on `term` prunes row groups at the scan

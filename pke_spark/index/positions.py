@@ -85,10 +85,6 @@ def positions_dir(index_dir: str) -> str:
     return f"{index_dir}/positions"
 
 
-def has_positions(index_dir: str) -> bool:
-    return os.path.exists(positions_dir(index_dir))
-
-
 def swap_positions(index_dir: str, new_name: str) -> None:
     """Atomically point the sidecar at ``index_dir/new_name``, then
     best-effort delete the previous directory."""

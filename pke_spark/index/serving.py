@@ -14,15 +14,14 @@ reads. Row-for-row parity with the DataFrame ops is asserted in
 
 Physical shapes:
 
-- **dictionary expansion**: the prefix range ``[p, p + U+10FFFF)``
-  picks the postings row groups whose footer ``term`` min/max meet it
-  (postings files are term-sorted, so that is a run of adjacent
-  groups per file; ``IndexReader.dictionary_range``), their
-  ``(term, df)`` columns are read with pyarrow (the ``blocks`` column
-  is never touched), and the expansion SQL — sargable range, the fuzzy
-  length band before any edit distance, LIKE, regexp — runs over those
-  rows on the reader's DuckDB connection. This mirrors Lucene's
-  MultiTermQuery rewrite against its terms dict.
+- **dictionary expansion** (``_expand``): the prefix range
+  ``[p, p + U+10FFFF)`` picks the postings row groups whose footer
+  ``term`` min/max meet it (a run of adjacent groups per term-sorted
+  file), whose ``(term, df)`` columns are read one group at a time
+  (``blocks`` is never touched) and filtered by one ``pyarrow.compute``
+  mask — range, LIKE, RE2 regex, or the fuzzy length band — before a
+  numpy edit distance, df sum, ranking and cap. No query engine runs:
+  Lucene's MultiTermQuery rewrite against its terms dict.
 - **query-string execution**: expansions + literal terms score via the
   reader's decoded-postings LRU (sorted-array accumulation, the
   ``_driver_rows`` discipline); MUST / MUST_NOT are sorted-array set
@@ -45,13 +44,14 @@ driver memory falls back to the distributed scorer for ranking
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..ops.querylang import (ParsedQuery, filters_condition,
                              filters_predicate,
                              parse_querystring)
-from ..tokenizer import sql_quote as _sq
 from .build import IndexReader
 from ..rows import rows_df
 from .positions import term_positions
@@ -102,19 +102,79 @@ def _over_budget(ix: IndexReader, terms: list[str]) -> bool:
 
 # ------------------------------------------------------------ expansion
 
-def _expand_sql(ix: IndexReader, lo: str, hi: str | None,
-                sql: str) -> list[str]:
-    """Run an expansion's SQL on the reader's DuckDB connection, with
-    ``term_dictionary`` bound to a stream of the ``(term, df)`` rows of
-    the row groups whose term range meets [lo, hi) (``IndexReader
-    .dictionary_range``). The SQL keeps its own range predicate, so the
-    pruned rows only bound the work, never the answer."""
-    con = ix._duckdb()
-    con.register("term_dictionary", ix.dictionary_range(lo, hi))
-    try:
-        return [r[0] for r in con.execute(sql).fetchall()]
-    finally:
-        con.unregister("term_dictionary")
+def _levenshtein(terms: pa.Array, query: str, max_edits: int,
+                 pool) -> np.ndarray:
+    """Code-point edit distance from each of ``terms`` to ``query``, or
+    some value above ``max_edits``: the Wagner-Fischer table filled one
+    term position at a time for all terms at once, dropping a term once
+    its column minimum exceeds ``max_edits`` (Ukkonen's cut-off)."""
+    lens = pc.utf8_length(terms, memory_pool=pool).to_numpy()
+    _, offs, data = terms.buffers()
+    offs = np.frombuffer(offs, np.int32, len(terms) + 1, 4 * terms.offset)
+    text = bytes(data or b"")[offs[0]:offs[-1]].decode()
+    cps = np.zeros((max(lens.max(), 1), len(lens)), np.uint32)
+    cps[np.arange(len(text)) - np.repeat(np.cumsum(lens) - lens, lens),
+        np.repeat(np.arange(len(lens)), lens)] = np.frombuffer(
+            text.encode("utf-32-le"), np.uint32)
+    q = np.frombuffer(query.encode("utf-32-le"), np.uint32)[:, None]
+    dist = np.where(lens == 0, len(q), max_edits + 1)
+    live = np.arange(len(lens))
+    col = np.tile(np.arange(len(q) + 1, dtype=np.int32)[:, None], len(lens))
+    for j in range(lens.max()):
+        prev, col = col, np.empty_like(col)
+        col[0] = j + 1
+        np.minimum(prev[1:] + 1, prev[:-1] + (cps[j, live] != q),
+                   out=col[1:])
+        for i in range(1, len(q) + 1):
+            np.minimum(col[i], col[i - 1] + 1, out=col[i])
+        end = lens[live] == j + 1
+        dist[live[end]] = col[-1, end]
+        keep = np.flatnonzero(~end & (col.min(axis=0) <= max_edits))
+        live, col = live[keep], col[:, keep]
+    return dist
+
+
+def _expand(ix: IndexReader, prefix: str, max_expansions: int,
+            match: tuple[str, str] | None = None,
+            near: tuple[str, int] | None = None) -> list[str]:
+    """The dictionary scan of every ``expand_*_indexed``: per row group
+    that can hold a term starting with ``prefix`` (any, if empty), one
+    mask keeps those terms that ``match`` (a ``pyarrow.compute`` kernel,
+    pattern) accepts or whose length is within max_edits of ``near=(query,
+    max_edits)``; the driver holds one group plus the matches. Ranked
+    (df DESC, term ASC), for ``near`` by distance first; capped."""
+    pool = pa.system_memory_pool()  # as _read_row_group reads with
+    hi = prefix + chr(0x10FFFF) if prefix else None
+    kept = []
+    for tbl in ix._read_rows(ix._row_groups_in(prefix, hi), ["term", "df"]):
+        terms = tbl.column("term")
+        mask = np.ones(tbl.num_rows, bool)
+        if prefix:  # [prefix, hi): the range the row groups were picked by
+            mask &= pc.greater_equal(terms, prefix, memory_pool=pool) \
+                .to_numpy() & pc.less(terms, hi, memory_pool=pool).to_numpy()
+        if match is not None:
+            mask &= pc.call_function(
+                match[0], [terms], pc.MatchSubstringOptions(match[1]),
+                memory_pool=pool).to_numpy()
+        if near is not None:
+            size = pc.utf8_length(terms, memory_pool=pool).to_numpy()
+            mask &= abs(size - len(near[0])) <= near[1]
+        if mask.any():
+            kept.append(pc.filter(tbl, mask, memory_pool=pool))
+    if not kept:
+        return []
+    rows = pa.concat_tables(kept, memory_pool=pool)
+    terms = rows.column("term").combine_chunks(memory_pool=pool)
+    uniq = pc.unique(terms, memory_pool=pool)
+    uniq = uniq.take(pc.sort_indices(uniq, memory_pool=pool))
+    at = pc.index_in(terms, value_set=uniq, memory_pool=pool).to_numpy()
+    df = np.bincount(at, weights=rows.column("df").to_numpy(),
+                     minlength=len(uniq))
+    dist = (_levenshtein(uniq, *near, pool) if near
+            else np.zeros(len(uniq), int))
+    order = np.lexsort((-df, dist))  # stable: equal keys keep term order
+    order = order[dist[order] <= (near[1] if near else 0)]
+    return uniq.take(order[:max(int(max_expansions), 0)]).to_pylist()
 
 
 def expand_prefix_indexed(ix: IndexReader, prefix: str,
@@ -122,8 +182,7 @@ def expand_prefix_indexed(ix: IndexReader, prefix: str,
     """Expansion terms for ``prefix*`` from the index term dictionary,
     (df DESC, term ASC)-ranked and capped — identical semantics to
     ``ops.termexpand.expand_prefix`` (parity-tested). One pruned
-    dictionary range read; df is summed over LSM fragments (each (term, doc)
-    lives in exactly one fragment, so the sum IS the df).
+    dictionary range scan (``_expand``).
 
     Deleted-doc df caveat (ADVICE r4, all ``expand_*_indexed``): the
     ranking df is the BUILD-TIME count and still includes tombstoned
@@ -137,13 +196,7 @@ def expand_prefix_indexed(ix: IndexReader, prefix: str,
     test_expansion_df_semantics_with_tombstones."""
     if not prefix:
         raise ValueError("empty prefix would expand the whole vocabulary")
-    hi = prefix + chr(0x10FFFF)
-    return _expand_sql(
-        ix, prefix, hi,
-        f"SELECT term FROM term_dictionary "
-        f"WHERE term >= {_sq(prefix)} AND term < {_sq(hi)} "
-        f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}")
+    return _expand(ix, prefix, max_expansions)
 
 
 def expand_fuzzy_indexed(ix: IndexReader, term: str, max_edits: int = 1,
@@ -151,54 +204,38 @@ def expand_fuzzy_indexed(ix: IndexReader, term: str, max_edits: int = 1,
                          max_expansions: int = 32) -> list[str]:
     """Expansion terms for ``term~max_edits`` from the index term
     dictionary: prefixLength range + length band gate the dictionary
-    scan BEFORE any levenshtein evaluation, then (distance ASC,
+    scan BEFORE any edit distance is computed, then (distance ASC,
     df DESC, term ASC), capped — identical semantics to
-    ``ops.termexpand.expand_fuzzy``."""
+    ``ops.termexpand.expand_fuzzy``. Lengths and distances count code
+    points, as Spark's ``levenshtein`` and Lucene do; the DuckDB
+    oracle twins' ``levenshtein`` counts UTF-8 bytes ('café' to 'cafe'
+    is 2 there), which is identical on ASCII data only."""
     if max_edits < 1:
         raise ValueError("max_edits must be >= 1 (0 is a TermQuery)")
-    pfx = ""
-    lo, hi = "", None
-    if prefix_len > 0:
-        lo = term[:prefix_len]
-        hi = lo + chr(0x10FFFF)
-        pfx = f"AND term >= {_sq(lo)} AND term < {_sq(hi)} "
-    return _expand_sql(
-        ix, lo, hi,
-        f"SELECT term FROM term_dictionary "
-        f"WHERE abs(length(term) - {len(term)}) <= {int(max_edits)} {pfx}"
-        f"GROUP BY term "
-        f"HAVING levenshtein(term, {_sq(term)}) <= {int(max_edits)} "
-        f"ORDER BY levenshtein(term, {_sq(term)}) ASC, sum(df) DESC, "
-        f"term ASC LIMIT {int(max_expansions)}")
+    return _expand(ix, term[:max(prefix_len, 0)], max_expansions,
+                   near=(term, int(max_edits)))
 
 
 def expand_wildcard_indexed(ix: IndexReader, pattern: str,
                             max_expansions: int = 32) -> list[str]:
     """Expansion terms for a wildcard pattern from the index term
-    dictionary — literal-prefix range + LIKE, (df DESC,
-    term ASC)-ranked, capped. Parity: ``ops.termexpand
-    .expand_wildcard``."""
+    dictionary — literal-prefix range + LIKE (``match_like``, with the
+    same ``\\`` escape), (df DESC, term ASC)-ranked, capped. Parity:
+    ``ops.termexpand.expand_wildcard``."""
     from ..ops.termexpand import (_check_wildcard, wildcard_like,
                                   wildcard_prefix)
     _check_wildcard(pattern)
-    pfx = wildcard_prefix(pattern)
-    hi = pfx + chr(0x10FFFF)
-    return _expand_sql(
-        ix, pfx, hi,
-        f"SELECT term FROM term_dictionary "
-        f"WHERE term >= {_sq(pfx)} AND term < {_sq(hi)} "
-        f"AND term LIKE {_sq(wildcard_like(pattern))} ESCAPE '\\' "
-        f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}")
+    return _expand(ix, wildcard_prefix(pattern), max_expansions,
+                   ("match_like", wildcard_like(pattern)))
 
 
 def expand_regex_indexed(ix: IndexReader, pattern: str,
                          max_expansions: int = 32) -> list[str]:
     """Expansion terms for a RegexpQuery from the index term
-    dictionary — whole-term match, best-effort literal-prefix range
-    gate (a pattern with no literal prefix scans the dictionary, the
-    Lucene automaton worst case). Parity: ``ops.termexpand
-    .expand_regex``."""
+    dictionary — whole-term RE2 match (``^(?:pattern)$``, the engine of
+    DuckDB's ``regexp_full_match``), best-effort literal-prefix range
+    gate (none: the whole dictionary, Lucene's automaton worst case).
+    Parity: ``ops.termexpand.expand_regex``."""
     import re as _re
 
     from ..ops.termexpand import regex_prefix
@@ -206,15 +243,8 @@ def expand_regex_indexed(ix: IndexReader, pattern: str,
         _re.compile(pattern)
     except _re.error as e:
         raise ValueError(f"bad regex {pattern!r}: {e}") from e
-    pfx = regex_prefix(pattern)
-    gate = (f"term >= {_sq(pfx)} AND term < {_sq(pfx + chr(0x10FFFF))} "
-            f"AND ") if pfx else ""
-    return _expand_sql(
-        ix, pfx, pfx + chr(0x10FFFF) if pfx else None,
-        f"SELECT term FROM term_dictionary "
-        f"WHERE {gate}regexp_full_match(term, {_sq(pattern)}) "
-        f"GROUP BY term ORDER BY sum(df) DESC, term ASC "
-        f"LIMIT {int(max_expansions)}")
+    return _expand(ix, regex_prefix(pattern), max_expansions,
+                   ("match_substring_regex", f"^(?:{pattern})$"))
 
 
 def _clause_expansions(ix: IndexReader, pq: ParsedQuery,

@@ -25,7 +25,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pke_spark.corpus import synth_corpus, with_doc_ids  # noqa: E402
 from pke_spark.index.build import (IndexReader, _dir_bytes,  # noqa: E402
@@ -34,7 +35,6 @@ from pke_spark.index.wand import wand_topk  # noqa: E402
 from pke_spark.session import get_spark  # noqa: E402
 from pke_spark.streaming import append_batch, refresh_postings  # noqa: E402
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import BENCH_QUERIES  # noqa: E402
 
 
@@ -225,7 +225,7 @@ def main() -> None:
     out["wand_p50_postfold"] = round(p50_fold, 4)
     out["incremental_fold_n_docs_ok"] = True
 
-    path = "/root/repo/benchmarks/capacity_2m.json"
+    path = f"{ROOT}/benchmarks/capacity_2m.json"
     json.dump(out, open(path, "w"), indent=2)
     print(json.dumps(out))
     shutil.rmtree(ix_dir, ignore_errors=True)

@@ -10,9 +10,11 @@ Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

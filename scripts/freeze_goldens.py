@@ -34,7 +34,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 ROWS_ONLY = [
     "textrank", "textrank_toppct", "singlerank", "positionrank",
@@ -43,7 +44,8 @@ ROWS_ONLY = [
     "wingnus_predict",
 ]
 SF_DIR = os.environ.get("FREEZE_SF_DIR", "/root/testdata/sf0.01")
-GOLDEN_DIR = os.environ.get("FREEZE_GOLDEN_DIR", "/root/repo/tests/golden")
+GOLDEN_DIR = os.environ.get("FREEZE_GOLDEN_DIR",
+                            os.path.join(ROOT, "tests", "golden"))
 
 
 def normalize(df):

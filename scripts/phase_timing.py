@@ -16,9 +16,11 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import os, shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.getcwd())  # run with cwd = the checkout
 from pke_spark.corpus import synth_corpus, with_doc_ids
 from pke_spark.index import build as B
 from pke_spark.session import get_spark
@@ -63,7 +65,8 @@ def main() -> None:
     label = sys.argv[3] if len(sys.argv) > 3 else "baseline"
     out = subprocess.run(
         ["taskset", "-c", f"0-{cpus - 1}", sys.executable, "-c", CHILD,
-         str(cpus), str(n_docs)], capture_output=True, text=True, timeout=2400)
+         str(cpus), str(n_docs)], cwd=ROOT, capture_output=True, text=True,
+        timeout=2400)
     for line in out.stdout.splitlines():
         if "PHASES" in line:
             parts = line.split("PHASES")[1].split()
@@ -73,7 +76,7 @@ def main() -> None:
                    "phaseA_segments_sec": round(t_a, 2),
                    "phaseB_encode_sec": round(t_b, 2),
                    "build_sec": round(t_a + t_b, 2)}
-            path = "/root/repo/benchmarks/phase_timing.json"
+            path = f"{ROOT}/benchmarks/phase_timing.json"
             hist = []
             if os.path.exists(path):
                 hist = json.load(open(path))

@@ -40,6 +40,8 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _cpu_times() -> tuple[int, int]:
     with open("/proc/stat") as f:
@@ -51,8 +53,8 @@ N_LOW = int(os.environ.get("SCALE_N_LOW", "2"))
 N_HIGH = int(os.environ.get("SCALE_N_HIGH", "8"))
 
 CHILD = r"""
-import shutil, sys, tempfile, time
-sys.path.insert(0, "/root/repo")
+import os, shutil, sys, tempfile, time
+sys.path.insert(0, os.getcwd())  # run with cwd = the checkout
 from pke_spark.corpus import synth_corpus, with_doc_ids
 from pke_spark.index.build import build_index
 from pke_spark.session import get_spark
@@ -117,7 +119,7 @@ def run_build(cpus: int, n_docs: int) -> tuple[float, float]:
     out = subprocess.run(
         ["taskset", "-c", f"0-{cpus - 1}",
          sys.executable, "-c", CHILD, str(cpus), str(n_docs)],
-        capture_output=True, text=True, timeout=2400)
+        cwd=ROOT, capture_output=True, text=True, timeout=2400)
     tot1, st1 = _cpu_times()
     steal_pct = 100.0 * (st1 - st0) / max(tot1 - tot0, 1)
     for line in out.stdout.splitlines():
@@ -160,13 +162,13 @@ def main() -> None:
                 + [{"cpus": N_HIGH, "sec": round(t, 2), "steal_pct": round(s, 1)}
                    for t, s in hi],
     }
-    os.makedirs("/root/repo/benchmarks", exist_ok=True)
+    os.makedirs(f"{ROOT}/benchmarks", exist_ok=True)
     fname = ("scaling_direct.json" if os.environ.get("SCALE_DIRECT") == "1"
              else "scaling_teed.json" if os.environ.get("SCALE_TEED") == "1"
              else "scaling_positions.json"
              if os.environ.get("SCALE_POSITIONS") == "1"
              else "scaling.json")
-    with open(f"/root/repo/benchmarks/{fname}", "w") as f:
+    with open(f"{ROOT}/benchmarks/{fname}", "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out, indent=2))
 

@@ -15,9 +15,11 @@ Usage: python scripts/train_tpr_fixture.py [sf_dir] [out_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pke_spark.ops import tpr  # noqa: E402
 from pke_spark.session import get_spark  # noqa: E402

@@ -6,7 +6,9 @@ parent's code)."""
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -40,3 +42,21 @@ def test_entry_imports_its_own_checkout(tmp_path):
     assert out.returncode == 0, out.stderr
     got = os.path.realpath(out.stdout.strip().splitlines()[-1])
     assert got.startswith(os.path.realpath(copy) + os.sep), got
+
+
+def test_no_script_or_test_puts_a_fixed_checkout_on_sys_path():
+    """Scripts and tests import the checkout they sit in (their own
+    directory, as ``tests/conftest.py`` does): a literal absolute path
+    on ``sys.path`` makes a copy of the tree test or measure another
+    checkout. Code embedded in strings (a child process's source) is
+    checked too."""
+    insert = re.compile(r"""sys\.path\.(?:insert|append)\(.*["']/""")
+    offenders = []
+    for sub in ("tests", "scripts"):
+        for path in sorted(glob.glob(os.path.join(ROOT, sub, "**", "*.py"),
+                                     recursive=True)):
+            with open(path, encoding="utf-8") as f:
+                for n, line in enumerate(f, 1):
+                    if insert.search(line):
+                        offenders.append(f"{os.path.relpath(path, ROOT)}:{n}")
+    assert offenders == []

@@ -13,11 +13,12 @@ regression fails here before it fails there.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from pke_spark import golden  # noqa: E402

@@ -306,10 +306,9 @@ def test_warm_rare_miss_reads_one_row_group_per_file(spark, sorted_ix,
 def test_unbounded_expansion_streams_the_dictionary(spark, legacy_stats_ix,
                                                     monkeypatch):
     """A regex with no literal prefix covers every row group. The
-    expansion SQL pulls them as it goes: the Arrow memory still held
-    when a row group is read is bounded by the scan's read-ahead
-    (Arrow queues up to 32 batches of a batch stream and reads 16
-    ahead; DuckDB holds a few), never by the groups read so far."""
+    expansion filters each group as it is read and keeps only its
+    matches, so the Arrow memory still held when a row group is read is
+    the matches so far, never the groups read so far."""
     ix = IndexReader(spark, legacy_stats_ix)
     ix.term_dfs(["alpha"])  # warm: footer index and DuckDB connection
     pool = pa.system_memory_pool()

@@ -94,6 +94,143 @@ def test_fuzzy_expansion_semantics(fx_ix):
         SV.expand_fuzzy_indexed(fx_ix, "beta", 0)
 
 
+# Non-ASCII dictionaries: distances and lengths count code points. In
+# UTF-8, 'привет' and 'привед' differ in 2 bytes but 1 code point, as do
+# 'café' and 'cafe'.
+LANG_FIXTURES = {
+    "cyrillic": [
+        (1, "привет мир"),
+        (2, "привет привод"),
+        (3, "приветы друзьям"),
+        (4, "привод и приход"),
+        (5, "превед медвед"),
+    ],
+    "latin": [
+        (1, "café au lait"),
+        (2, "les cafés de paris"),
+        (3, "un cafe noir au café"),
+        (4, "cafard à paris"),
+        (5, "l'été au calé"),
+    ],
+}
+
+
+@pytest.fixture(scope="module")
+def lang_ixs(spark):
+    out, dirs = {}, []
+    for profile, rows in LANG_FIXTURES.items():
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        dirs.append(tempfile.mkdtemp(prefix=f"sv{profile}_"))
+        build_index(docs, dirs[-1], n_parts=2, n_salts=2, profile=profile)
+        out[profile] = docs, IndexReader(spark, dirs[-1])
+    yield out
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("profile,term,edits,prefix_len", [
+    ("cyrillic", "привед", 1, 1), ("cyrillic", "приход", 2, 1),
+    ("cyrillic", "мир", 1, 0), ("latin", "cafe", 1, 1),
+    ("latin", "cafés", 1, 1), ("latin", "calé", 2, 0)])
+def test_fuzzy_counts_code_points_like_the_spark_twin(
+        lang_ixs, profile, term, edits, prefix_len):
+    docs, ix = lang_ixs[profile]
+    want = [r.term for r in TE.expand_fuzzy(
+        docs, term, edits, prefix_len, profile=profile).collect()]
+    assert SV.expand_fuzzy_indexed(ix, term, edits, prefix_len) == want
+
+
+def test_fuzzy_finds_terms_one_code_point_apart(lang_ixs):
+    """'привет' and 'café' are one code point (two UTF-8 bytes) from
+    the query: distance 1, ranked by df then term."""
+    assert SV.expand_fuzzy_indexed(lang_ixs["cyrillic"][1], "привед", 1) \
+        == ["привет", "привод", "превед"]
+    assert SV.expand_fuzzy_indexed(lang_ixs["latin"][1], "cafe", 1) == [
+        "cafe", "café"]
+
+
+@pytest.mark.parametrize("profile", sorted(LANG_FIXTURES))
+def test_wildcard_on_non_ascii_dictionaries(lang_ixs, profile):
+    docs, ix = lang_ixs[profile]
+    for pattern in ["caf?", "caf*", "пр?ве*", "при*д"]:
+        want = [r.term for r in TE.expand_wildcard(
+            docs, pattern, profile=profile).collect()]
+        assert SV.expand_wildcard_indexed(ix, pattern) == want, pattern
+    if profile == "latin":
+        assert SV.expand_wildcard_indexed(ix, "caf?") == ["café", "cafe"]
+
+
+def _edit_distance(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1,
+                           prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_vectorized_levenshtein_matches_the_textbook_table():
+    """``serving._levenshtein`` (the terms' UTF-8 buffer decoded once,
+    all terms at once, Ukkonen cut-off) against the row-by-row table,
+    over 1-4 byte code points, empty strings and sliced Arrow arrays."""
+    import random
+
+    import numpy as np
+    import pyarrow as pa
+    rng = random.Random(11)
+    alphabet = "abzéßд日𝄞"
+    for _ in range(300):
+        words = ["".join(rng.choices(alphabet, k=rng.randint(0, 7)))
+                 for _ in range(rng.randint(2, 30))]
+        terms = pa.array(words).slice(rng.randint(0, 1))
+        query = "".join(rng.choices(alphabet, k=rng.randint(0, 6)))
+        k = rng.randint(1, 3)
+        want = np.array([_edit_distance(w, query)
+                         for w in terms.to_pylist()])
+        got = SV._levenshtein(terms, query, k, pa.system_memory_pool())
+        assert np.array_equal(np.minimum(got, k + 1),
+                              np.minimum(want, k + 1)), (words, query, k)
+
+
+def test_expansions_open_no_duckdb_connection(fx_ix, monkeypatch):
+    """Expansion reads the dictionary row groups with pyarrow and
+    filters them with ``pyarrow.compute``: a warm reader calls no
+    DuckDB for any of the four kinds."""
+    fx_ix._duckdb()  # even a reader that holds a connection uses none
+    calls = []
+    real = IndexReader._duckdb
+    monkeypatch.setattr(IndexReader, "_duckdb",
+                        lambda self: calls.append(1) or real(self))
+    assert SV.expand_prefix_indexed(fx_ix, "al") == [
+        "alpha", "albatross", "alpine"]
+    assert SV.expand_fuzzy_indexed(fx_ix, "alpho", 1) == ["alpha"]
+    assert SV.expand_wildcard_indexed(fx_ix, "al*e") == ["alpine"]
+    assert SV.expand_regex_indexed(fx_ix, "(al|ga).*a") == [
+        "alpha", "gamma"]
+    assert SV.querystring_search_indexed(fx_ix, "alp* gamma~1", 10)
+    assert calls == []
+
+
+def test_expansions_with_no_match_are_empty(fx_ix):
+    """Every kind returns [] without error when no row group can hold a
+    match (a range past the vocabulary's end), when row groups are read
+    but nothing matches, and for a fuzzy term with no neighbour."""
+    past = "\U0010fffe"
+    assert SV.expand_prefix_indexed(fx_ix, past) == []
+    assert SV.expand_fuzzy_indexed(fx_ix, past + "a", 1) == []
+    assert SV.expand_wildcard_indexed(fx_ix, past + "*") == []
+    assert SV.expand_regex_indexed(fx_ix, past + ".*") == []
+    assert SV.expand_prefix_indexed(fx_ix, "alq") == []
+    assert SV.expand_wildcard_indexed(fx_ix, "al*q") == []
+    assert SV.expand_regex_indexed(fx_ix, "[0-9]+") == []
+    assert SV.expand_regex_indexed(fx_ix, "q.*") == []
+    assert SV.expand_fuzzy_indexed(fx_ix, "aqqqqqq", 2) == []
+    assert SV.expand_fuzzy_indexed(fx_ix, "qqqq", 1, prefix_len=0) == []
+    assert SV.expand_prefix_indexed(fx_ix, "al", max_expansions=0) == []
+
+
 # ------------------------------------------------------ 2. sf0.001 parity
 
 def _rows3(df):
