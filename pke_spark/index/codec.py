@@ -3,21 +3,35 @@ fixed-size blocks carrying block-max tf statistics (SURVEY §4.3; the
 distributed generalization of the reference's term->df TSV artifact,
 pke/utils.py:126-139).
 
-Each compressed value stream is TAGGED with a 1-byte codec id and the
-encoder picks the cheaper of two codecs per stream:
+Wire format. Each compressed value stream is TAGGED with a 1-byte codec
+id, and the encoder picks the cheaper of two codecs per stream:
 
 - ``0x01`` LEB128 varint (byte-aligned; wins for tiny streams and
   wide-dynamic-range values), and
 - ``0x02`` NewPFD-style PForDelta: all values bit-packed at a fixed
-  width ``b`` chosen near the 90th-percentile bit length, with the
-  few larger values patched as exceptions (position byte + varint
-  high bits). Sub-byte widths are where the win is: dense-ordinal
-  gaps and tfs are mostly 1-3 bits wide, which varint cannot encode
-  in under 8.
+  width ``b``, with the few larger values patched as exceptions
+  (position byte + varint high bits). Sub-byte widths are where the
+  win is: dense-ordinal gaps and tfs are mostly 1-3 bits wide, which
+  varint cannot encode in under 8.
 
-All encode/decode paths are numpy-vectorized (packbits/unpackbits and
-byte-plane sweeps; no per-value Python in the hot loop), suitable for
-use inside Arrow-batched applyInPandas / mapInArrow.
+Size rule: the cheapest of varint, PFOR at the max bit width and PFOR
+at the p90 width (both capped at ``_PFOR_MAX_B``); streams over
+``_PFOR_MAX_N`` values are always varint; on a tie varint wins, and
+between the two PFOR widths the wider one wins. An empty stream is
+zero bytes (decoders key on the count).
+
+One encoder. ``encode_streams`` encodes MANY streams per call,
+segmented: the size rule, the width choice and the byte writes are
+vector operations over every stream at once, so Python runs once per
+distinct PFOR width and once per varint byte plane, never once per
+stream or per term. ``encode_runs`` builds a whole ``list<struct>``
+blocks column (one list per posting run) from Arrow buffers on top of
+it; ``encode_stream`` and ``encode_blocks`` are one-run wrappers.
+``decode_streams`` / ``decode_runs`` are the segmented decoders of the
+rewrite paths (compact, the build's eager merge, purge, the positional
+merge). The serving read path decodes one block at a time with the
+scalar ``decode_stream`` / ``decode_block``, which is faster for a
+single block than the segmented kernel's fixed cost.
 
 docIDs are signed int64 (xxhash64 output); we map them order-preservingly
 to uint64 via XOR(1<<63) before delta encoding so deltas are small
@@ -49,28 +63,57 @@ def from_u64(u: np.ndarray) -> np.ndarray:
     return (u ^ _SIGN).view(np.int64)
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128 encode a uint64 array (vectorized byte-plane sweep)."""
-    v = values.astype(np.uint64, copy=True)
-    if len(v) == 0:
-        return b""
-    # bytes needed per value
-    nb = np.ones(len(v), dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nb += (tmp > 0)
-        tmp >>= np.uint64(7)
-    pos = np.zeros(len(v), dtype=np.int64)
-    np.cumsum(nb[:-1], out=pos[1:])
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    cur = v
-    for i in range(int(nb.max())):
-        mask = nb > i
-        b = (cur[mask] & np.uint64(0x7F)).astype(np.uint8)
-        b[(nb[mask] - 1) > i] |= 0x80
-        out[pos[mask] + i] = b
-        cur = cur >> np.uint64(7)
-    return out.tobytes()
+# ------------------------------------------------------- segment helpers
+
+def _starts(lens: np.ndarray) -> np.ndarray:
+    """Offset of each segment's first value in the flat array."""
+    s = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=s[1:])
+    return s
+
+
+def _seg_sum(q: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Exact per-segment sum of ``q`` (empty segments sum to 0)."""
+    c = np.zeros(len(q) + 1, dtype=np.int64)
+    np.cumsum(q, out=c[1:])
+    s = _starts(lens)
+    return c[s + lens] - c[s]
+
+
+def _rank_in_seg(q: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Per value: the sum of ``q`` over the earlier values of its own
+    segment (an exclusive cumulative sum restarted at each segment)."""
+    c = np.zeros(len(q) + 1, dtype=np.int64)
+    np.cumsum(q, out=c[1:])
+    return c[:-1] - np.repeat(c[_starts(lens)], lens)
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenation of ``arange(s, s + n)`` over the (s, n) pairs."""
+    return (np.arange(int(lens.sum()), dtype=np.int64)
+            + np.repeat(starts - _starts(lens), lens))
+
+
+# ---------------------------------------------------------------- varint
+
+def _varint_nbytes(bl: np.ndarray) -> np.ndarray:
+    """LEB128 size per value from its bit length."""
+    return np.maximum((bl + 6) // 7, 1)
+
+
+def _put_varints(out: np.ndarray, pos: np.ndarray, v: np.ndarray,
+                 nb: np.ndarray) -> None:
+    """Write the LEB128 form of ``v[i]`` at ``out[pos[i]:pos[i]+nb[i]]``,
+    one byte plane per pass."""
+    cur = v.astype(np.uint64, copy=True)
+    for i in range(int(nb.max()) if len(nb) else 0):
+        live = nb > i
+        if not live.all():
+            pos, cur, nb = pos[live], cur[live], nb[live]
+        b = (cur & np.uint64(0x7F)).astype(np.uint8)
+        b[nb - 1 > i] |= 0x80
+        out[pos + i] = b
+        cur >>= np.uint64(7)
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
@@ -91,68 +134,183 @@ def varint_decode(buf: bytes) -> np.ndarray:
 
 
 def _bitlen(v: np.ndarray) -> np.ndarray:
-    """Exact bit length per uint64 value (log2 + two-sided correction
-    for float rounding; values at/above 2^63 clamp to 64)."""
-    bl = np.zeros(len(v), dtype=np.int64)
-    m = v > 0
-    if m.any():
-        f = np.floor(np.log2(v[m].astype(np.float64))).astype(np.int64) + 1
-        sh = np.minimum(f, 63).astype(np.uint64)
-        f += ((v[m] >> sh) > 0) & (f < 64)
-        f -= (v[m] >> np.maximum(f - 1, 0).astype(np.uint64)) == 0
-        bl[m] = f
-    return bl
+    """Exact bit length per uint64 value: the float64 exponent field,
+    corrected where rounding to 53 bits carried into the next power."""
+    e = (v.astype(np.float64).view(np.int64) >> 52) - 1022
+    np.maximum(e, 0, out=e)  # 0.0 has exponent field 0
+    big = np.flatnonzero(e > 53)
+    if len(big):
+        e[big] -= (v[big] >> (e[big] - 1).astype(np.uint64)) == 0
+    return e
 
 
-def _pfor_cost(n: int, b: int, bl: np.ndarray) -> int:
-    exc = bl > b
-    if not exc.any():
-        return 4 + (n * b + 7) // 8
-    return (4 + (n * b + 7) // 8 + int(exc.sum())
-            + int(((bl[exc] - b + 6) // 7).sum()))
+# ------------------------------------------------------- stream kernels
+
+def _pfor_cost(lens, width, b_max, bl, sid):
+    """Per stream: (bytes of PFOR at ``width``, exception count). Only
+    streams with values wider than ``width`` pay a pass over values."""
+    n_exc = np.zeros(len(lens), dtype=np.int64)
+    high = np.zeros(len(lens), dtype=np.int64)
+    some = width < b_max
+    if some.any():
+        sub = lens[some]
+        blv = bl[some[sid]]
+        wv = np.repeat(width[some], sub)
+        exc = blv > wv
+        n_exc[some] = _seg_sum(exc, sub)
+        high[some] = _seg_sum(np.where(exc, (blv - wv + 6) // 7, 0), sub)
+    return 4 + (lens * width + 7) // 8 + n_exc + high, n_exc
+
+
+def encode_streams(values: np.ndarray, lens
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Encode the concatenated uint64 streams ``values`` (stream i holds
+    ``lens[i]`` values) -> (uint8 data, int64 offsets): stream i is
+    ``data[offsets[i]:offsets[i + 1]]``, byte-equal in size to a
+    one-stream encode and decodable by ``decode_stream``."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    lens = np.asarray(lens, dtype=np.int64)
+    n_streams = len(lens)
+    first = _starts(lens)
+    sid = np.repeat(np.arange(n_streams, dtype=np.int64), lens)
+    bl = _bitlen(v)
+    nb = _varint_nbytes(bl)
+    nonempty = lens > 0
+    var_cost = np.where(nonempty, 1 + _seg_sum(nb, lens), 0)
+
+    # the two PFOR widths per stream: max and p90 bit length, capped
+    b_max = np.zeros(n_streams, dtype=np.int64)
+    b_p90 = np.zeros(n_streams, dtype=np.int64)
+    if len(v):
+        ne = np.flatnonzero(nonempty)
+        b_max[ne] = np.maximum.reduceat(bl, first[ne])
+        # sorting (stream, bit length) keys puts each stream's k-th
+        # smallest bit length at its start + k
+        keys = np.sort(sid * 65 + bl)
+        b_p90[ne] = keys[first[ne] + (lens[ne] - 1) * 9 // 10] - ne * 65
+    wide = np.minimum(b_max, _PFOR_MAX_B)
+    narrow = np.minimum(b_p90, _PFOR_MAX_B)
+    cost_w, exc_w = _pfor_cost(lens, wide, b_max, bl, sid)
+    cost_n, exc_n = _pfor_cost(lens, narrow, b_max, bl, sid)
+    take_w = cost_w <= cost_n
+    p_cost = np.where(take_w, cost_w, cost_n)
+    pfor = nonempty & (lens <= _PFOR_MAX_N) & (p_cost < var_cost)
+    width = np.where(pfor, np.where(take_w, wide, narrow), 0)
+    n_exc = np.where(pfor, np.where(take_w, exc_w, exc_n), 0)
+
+    offsets = np.zeros(n_streams + 1, dtype=np.int64)
+    np.cumsum(np.where(pfor, p_cost, var_cost), out=offsets[1:])
+    data = np.zeros(int(offsets[-1]), dtype=np.uint8)
+    off = offsets[:-1]
+
+    # varint streams: tag, then the values back to back
+    vs = np.flatnonzero(nonempty & ~pfor)
+    data[off[vs]] = TAG_VARINT
+    vi = _ranges(first[vs], lens[vs])
+    _put_varints(data, np.repeat(off[vs] + 1, lens[vs])
+                 + _rank_in_seg(nb[vi], lens[vs]), v[vi], nb[vi])
+
+    # PFOR streams: tag, width, exception count (2 bytes), exception
+    # positions, the packed low bits, the exceptions' varint high bits
+    ps = np.flatnonzero(pfor)
+    data[off[ps]] = TAG_PFOR
+    data[off[ps] + 1] = width[ps]
+    data[off[ps] + 2] = n_exc[ps] & 0xFF
+    data[off[ps] + 3] = n_exc[ps] >> 8
+    packed_at = off + 4 + n_exc
+    packed_len = (lens * width + 7) // 8
+    for b in np.unique(width[ps]):
+        if b == 0:
+            continue
+        s_b = ps[width[ps] == b]
+        # pad every stream to a multiple of 8 values, so each one packs
+        # into whole bytes of its own
+        n_pad = (lens[s_b] + 7) // 8 * 8
+        low = np.zeros(int(n_pad.sum()), dtype=np.uint64)
+        low[_ranges(_starts(n_pad), lens[s_b])] = \
+            v[_ranges(first[s_b], lens[s_b])] & np.uint64((1 << int(b)) - 1)
+        # each value's low b bits, least significant first, in a row
+        bits = np.unpackbits(low.view(np.uint8).reshape(-1, 8)
+                             [:, :(b + 7) // 8], axis=1,
+                             bitorder="little")[:, :b]
+        packed = np.packbits(bits.ravel(), bitorder="little")
+        data[_ranges(packed_at[s_b], packed_len[s_b])] = \
+            packed[_ranges(_starts(n_pad) * b // 8, packed_len[s_b])]
+    es = np.flatnonzero(n_exc)
+    vi = _ranges(first[es], lens[es])
+    w_rep = np.repeat(width[es], lens[es])
+    exc = bl[vi] > w_rep
+    data[(np.repeat(off[es] + 4, lens[es])
+          + _rank_in_seg(exc, lens[es]))[exc]] = \
+        (vi - np.repeat(first[es], lens[es]))[exc]
+    high = v[vi[exc]] >> w_rep[exc].astype(np.uint64)
+    h_nb = _varint_nbytes(_bitlen(high))
+    _put_varints(data, np.repeat((packed_at + packed_len)[es], n_exc[es])
+                 + _rank_in_seg(h_nb, n_exc[es]), high, h_nb)
+    return data, offsets
+
+
+def decode_streams(data: np.ndarray, offsets: np.ndarray, lens
+                   ) -> np.ndarray:
+    """Segmented inverse of ``encode_streams``: stream i is
+    ``data[offsets[i]:offsets[i + 1]]`` (uint8) and holds ``lens[i]``
+    values -> the concatenated uint64 values."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    n_streams = len(lens)
+    start, end = offsets[:-1], offsets[1:]
+    nonempty = lens > 0
+    tag = np.zeros(n_streams, dtype=np.uint8)
+    tag[nonempty] = data[start[nonempty]]
+    known = np.isin(tag[nonempty], (TAG_VARINT, TAG_PFOR))
+    if not known.all():
+        raise ValueError("unknown stream codec tag "
+                         f"{int(tag[nonempty][~known][0]):#x}")
+    first = _starts(lens)
+    out = np.zeros(int(lens.sum()), dtype=np.uint64)
+
+    vs = np.flatnonzero(tag == TAG_VARINT)
+    out[_ranges(first[vs], lens[vs])] = varint_decode(
+        data[_ranges(start[vs] + 1, end[vs] - start[vs] - 1)])
+
+    ps = np.flatnonzero(tag == TAG_PFOR)
+    width = np.zeros(n_streams, dtype=np.int64)
+    n_exc = np.zeros(n_streams, dtype=np.int64)
+    width[ps] = data[start[ps] + 1]
+    n_exc[ps] = data[start[ps] + 2] | (data[start[ps] + 3].astype(np.int64) << 8)
+    packed_at = start + 4 + n_exc
+    packed_len = (lens * width + 7) // 8
+    for b in np.unique(width[ps]):
+        if b == 0:
+            continue
+        s_b = ps[width[ps] == b]
+        n_pad = (lens[s_b] + 7) // 8 * 8
+        buf = np.zeros(int(n_pad.sum()) * b // 8, dtype=np.uint8)
+        buf[_ranges(_starts(n_pad) * b // 8, packed_len[s_b])] = \
+            data[_ranges(packed_at[s_b], packed_len[s_b])]
+        bits = np.unpackbits(buf, bitorder="little").reshape(-1, b)
+        nbytes = (b + 7) // 8
+        if b % 8:
+            bits = np.pad(bits, ((0, 0), (0, nbytes * 8 - b)))
+        word = np.zeros((len(bits), 8), dtype=np.uint8)
+        word[:, :nbytes] = np.packbits(bits, axis=1, bitorder="little")
+        vals = word.view("<u8").ravel()
+        out[_ranges(first[s_b], lens[s_b])] = \
+            vals[_ranges(_starts(n_pad), lens[s_b])]
+    if n_exc.any():
+        e = np.flatnonzero(n_exc)
+        high_at = packed_at[e] + packed_len[e]
+        high = varint_decode(data[_ranges(high_at, end[e] - high_at)])
+        e_sid = np.repeat(e, n_exc[e])
+        tgt = first[e_sid] + data[_ranges(start[e] + 4, n_exc[e])]
+        out[tgt] |= high << width[e_sid].astype(np.uint64)
+    return out
 
 
 def encode_stream(values: np.ndarray) -> bytes:
-    """uint64 array -> tagged bytes, whichever of varint / PForDelta is
-    smaller for THIS stream. Empty input -> b'' (callers key decode on
-    the count, so no tag is needed)."""
+    """uint64 array -> tagged bytes (one-stream ``encode_streams``)."""
     v = np.asarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return b""
-    if n > _PFOR_MAX_N:
-        return bytes([TAG_VARINT]) + varint_encode(v)
-    bl = _bitlen(v)
-    # costs are computed analytically so only the WINNING codec pays
-    # its encode: varint is exactly max(1, ceil(bitlen/7)) bytes/value
-    var_cost = 1 + int(np.maximum((bl + 6) // 7, 1).sum())
-    # two candidate widths: max (no exceptions) and ~p90 (NewPFD)
-    b_max = int(bl.max())
-    k = (n - 1) * 9 // 10
-    b_p90 = int(np.partition(bl, k)[k])
-    best_b, best_cost = None, var_cost
-    for b in {min(b_max, _PFOR_MAX_B), min(b_p90, _PFOR_MAX_B)}:
-        c = _pfor_cost(n, b, bl)
-        if c < best_cost:
-            best_b, best_cost = b, c
-    if best_b is None:
-        return bytes([TAG_VARINT]) + varint_encode(v)
-    b = best_b
-    exc_idx = np.flatnonzero(bl > b)
-    if b:
-        mask = np.uint64((1 << b) - 1)
-        low = v & mask
-        bits = ((low[:, None] >> np.arange(b, dtype=np.uint64))
-                & np.uint64(1)).astype(np.uint8)
-        packed = np.packbits(bits, bitorder="little").tobytes()
-    else:
-        packed = b""
-    head = bytes([TAG_PFOR, b, len(exc_idx) & 0xFF,
-                  (len(exc_idx) >> 8) & 0xFF])
-    exc_pos = exc_idx.astype(np.uint8).tobytes()
-    exc_high = varint_encode(v[exc_idx] >> np.uint64(b)) if len(exc_idx) \
-        else b""
-    return head + exc_pos + packed + exc_high
+    return encode_streams(v, [len(v)])[0].tobytes()
 
 
 def decode_stream(buf: bytes, n: int) -> np.ndarray:
@@ -183,33 +341,136 @@ def decode_stream(buf: bytes, n: int) -> np.ndarray:
     return v
 
 
+# ------------------------------------------------- blocks, Arrow columns
+
+def block_layout(run_lens, block_size: int):
+    """Cut concatenated runs into blocks of at most ``block_size``:
+    -> (blocks per run, block lengths, block start offsets)."""
+    run_lens = np.asarray(run_lens, dtype=np.int64)
+    n_blocks = (run_lens + block_size - 1) // block_size
+    run = np.repeat(np.arange(len(run_lens)), n_blocks)
+    k = np.arange(int(n_blocks.sum()), dtype=np.int64) \
+        - np.repeat(_starts(n_blocks), n_blocks)
+    blen = np.minimum(block_size, run_lens[run] - k * block_size)
+    return n_blocks, blen, _starts(blen)
+
+
+def doc_gaps(u: np.ndarray, bstart: np.ndarray) -> np.ndarray:
+    """Per block, the uint64 gaps after its first doc, concatenated."""
+    d = np.empty(len(u), dtype=np.uint64)
+    np.subtract(u[1:], u[:-1], out=d[1:])
+    keep = np.ones(len(u), dtype=bool)
+    keep[bstart] = False
+    return d[keep]
+
+
+def blocks_column(n_blocks, fields: list, streams: list):
+    """-> Arrow ``list<struct>`` with one list of blocks per run.
+    ``fields``: (name, Arrow array) per fixed-width field; ``streams``:
+    (name, uint64 values, per-block lengths) per compressed field, all
+    encoded in one ``encode_streams`` call, each becoming a binary
+    column cut from the shared buffer."""
+    import pyarrow as pa
+    lens = [np.asarray(s[2], dtype=np.int64) for s in streams]
+    data, offs = encode_streams(
+        np.concatenate([np.asarray(s[1], dtype=np.uint64) for s in streams]),
+        np.concatenate(lens))
+    cols, at = [], 0
+    for ln in lens:
+        o = offs[at:at + len(ln) + 1]
+        cols.append(pa.Array.from_buffers(
+            pa.binary(), len(ln),
+            [None, pa.py_buffer((o - o[0]).astype(np.int32)),
+             pa.py_buffer(data[o[0]:o[-1]])]))
+        at += len(ln)
+    struct = pa.StructArray.from_arrays(
+        [a for _, a in fields] + cols,
+        names=[n for n, _ in fields] + [s[0] for s in streams])
+    list_offs = np.zeros(len(n_blocks) + 1, dtype=np.int32)
+    np.cumsum(n_blocks, out=list_offs[1:])
+    return pa.ListArray.from_arrays(pa.array(list_offs, pa.int32()), struct)
+
+
+def encode_runs(run_lens, doc: np.ndarray, tf: np.ndarray, dl: np.ndarray,
+                block_size: int = BLOCK_SIZE):
+    """Concatenated doc-sorted posting runs (run i holds ``run_lens[i]``
+    postings) -> the postings ``blocks`` column as an Arrow
+    ``list<struct{first_doc, last_doc, n, max_tf, docs, tfs, dls}>``,
+    one list per run. ``docs`` holds the gaps after ``first_doc``. Each
+    block decodes independently (skippable), and doc lengths (BM25
+    norms) ride in the block so scoring needs no doc-stats join."""
+    import pyarrow as pa
+    assert len(doc) == len(tf) == len(dl)
+    doc = np.asarray(doc, dtype=np.int64)
+    tf = np.asarray(tf, dtype=np.int64)
+    n_blocks, blen, bstart = block_layout(run_lens, block_size)
+    max_tf = (np.maximum.reduceat(tf, bstart) if len(bstart)
+              else np.empty(0, np.int64))
+    return blocks_column(n_blocks, [
+        ("first_doc", pa.array(doc[bstart], pa.int64())),
+        ("last_doc", pa.array(doc[bstart + blen - 1], pa.int64())),
+        ("n", pa.array(blen, pa.int32())),
+        ("max_tf", pa.array(max_tf, pa.int32())),
+    ], [
+        ("docs", doc_gaps(to_u64(doc), bstart), blen - 1),
+        ("tfs", tf, blen),
+        ("dls", dl, blen),
+    ])
+
+
 def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
                   block_size: int = BLOCK_SIZE) -> list[dict]:
-    """Sorted (doc_ids int64 ascending, tfs, dls) -> list of block dicts:
-    {first_doc, last_doc, n, max_tf, docs (varint gaps after first),
-     tfs (varint), dls (varint)}. Each block decodes independently
-    (skippable). Doc lengths (BM25 norms) are embedded in the block so
-    query-time scoring needs no doc-stats join."""
-    assert len(doc_ids) == len(tfs) == len(dls)
-    u = to_u64(np.asarray(doc_ids))
-    t = np.asarray(tfs, dtype=np.uint64)
-    d = np.asarray(dls, dtype=np.uint64)
-    blocks = []
-    for s in range(0, len(u), block_size):
-        e = min(s + block_size, len(u))
-        seg = u[s:e]
-        gaps = np.empty(e - s - 1, dtype=np.uint64)
-        np.subtract(seg[1:], seg[:-1], out=gaps)
-        blocks.append({
-            "first_doc": int(from_u64(seg[:1])[0]),
-            "last_doc": int(from_u64(seg[-1:])[0]),
-            "n": int(e - s),
-            "max_tf": int(t[s:e].max()),
-            "docs": encode_stream(gaps),
-            "tfs": encode_stream(t[s:e]),
-            "dls": encode_stream(d[s:e]),
-        })
-    return blocks
+    """One sorted run -> list of block dicts (one-run ``encode_runs``)."""
+    return encode_runs([len(doc_ids)], doc_ids, tfs, dls,
+                       block_size).to_pylist()[0]
+
+
+def unpack_blocks(blocks):
+    """Arrow ``list<struct>`` blocks column -> (input row of each block,
+    {field: numpy array, or (uint8 data, int64 offsets) for binary})."""
+    import pyarrow as pa
+    if isinstance(blocks, pa.ChunkedArray):
+        blocks = blocks.combine_chunks()
+    per_row = np.diff(blocks.offsets.to_numpy())
+    struct = blocks.flatten()
+    out = {}
+    for f, a in zip(struct.type, struct.flatten()):
+        if pa.types.is_binary(f.type):
+            bufs = a.buffers()
+            offs = np.frombuffer(bufs[1], np.int32, count=len(a) + 1,
+                                 offset=a.offset * 4).astype(np.int64)
+            data = (np.frombuffer(bufs[2], np.uint8) if bufs[2] is not None
+                    else np.empty(0, np.uint8))
+            out[f.name] = (data, offs)
+        else:
+            out[f.name] = a.to_numpy(zero_copy_only=False).astype(np.int64)
+    return np.repeat(np.arange(len(per_row), dtype=np.int64), per_row), out
+
+
+def block_docs(first_doc: np.ndarray, n: np.ndarray, gaps: np.ndarray
+               ) -> np.ndarray:
+    """Per-block first doc + gaps -> the blocks' int64 doc ids, by a
+    segmented cumulative sum (uint64 wraparound is exact)."""
+    u = np.empty(int(n.sum()), dtype=np.uint64)
+    bstart = _starts(n)
+    first = np.zeros(len(u), dtype=bool)
+    first[bstart] = True
+    u[bstart] = to_u64(first_doc)
+    u[~first] = gaps
+    c = np.cumsum(u)
+    return from_u64(c - np.repeat(c[bstart] - u[bstart], n))
+
+
+def decode_runs(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray,
+                                 np.ndarray]:
+    """Arrow postings ``blocks`` column -> flat int64 (row, doc, tf, dl)
+    over all rows at once; ``row`` is the input row of each posting."""
+    row, f = unpack_blocks(blocks)
+    n = f["n"]
+    doc = block_docs(f["first_doc"], n, decode_streams(*f["docs"], n - 1))
+    tf = decode_streams(*f["tfs"], n).astype(np.int64)
+    dl = decode_streams(*f["dls"], n).astype(np.int64)
+    return np.repeat(row, n), doc, tf, dl
 
 
 def _field(block, name):
@@ -238,15 +499,3 @@ def decode_blocks(blocks) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return (np.concatenate([p[0] for p in parts]),
             np.concatenate([p[1] for p in parts]),
             np.concatenate([p[2] for p in parts]))
-
-
-def merge_sorted_runs(runs: list[tuple[np.ndarray, np.ndarray, np.ndarray]]
-                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """k-way merge of sorted (doc_ids, tfs, dls) runs (bounded fan-in
-    step of the hierarchical salted merge). docIDs are globally unique
-    per term, so concatenate + stable argsort (vectorized) is exact."""
-    docs = np.concatenate([r[0] for r in runs])
-    tfs = np.concatenate([r[1] for r in runs])
-    dls = np.concatenate([r[2] for r in runs])
-    order = np.argsort(docs, kind="mergesort")
-    return docs[order], tfs[order], dls[order]

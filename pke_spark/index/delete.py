@@ -257,48 +257,57 @@ def purge_deleted(spark: SparkSession, index_dir: str, *,
     cur = postings_path(index_dir)
     p = spark.read.parquet(cur)
 
-    def _purge(pdf_iter):
+    cols = ["term", "shard", "df", "cf", "blocks"]
+
+    def _purge(batch_iter):
+        import pyarrow as pa
         t = bc.value
-        for pdf in pdf_iter:
-            rows = []
-            for r in pdf.itertuples():
-                docs, tfs, dls = codec.decode_blocks(r.blocks)
-                keep = keep_mask(docs, t)
-                if keep.all():
-                    rows.append((r.term, int(r.shard), int(r.df),
-                                 int(r.cf), r.blocks))
-                elif keep.any():
-                    d, tf, dl = docs[keep], tfs[keep], dls[keep]
-                    rows.append((r.term, int(r.shard), len(d),
-                                 int(tf.sum()),
-                                 codec.encode_blocks(d, tf, dl,
-                                                     block_size)))
-                # else: the whole row was deleted docs — drop it
-            yield pd.DataFrame(rows, columns=["term", "shard", "df",
-                                              "cf", "blocks"])
+        for batch in batch_iter:
+            if batch.num_rows == 0:
+                continue
+            row, docs, tfs, dls = codec.decode_runs(batch.column("blocks"))
+            keep = keep_mask(docs, t)
+            dead = np.bincount(row[~keep], minlength=batch.num_rows)
+            live = np.bincount(row[keep], minlength=batch.num_rows)
+            if (dead == 0).any():  # untouched rows pass through as-is
+                yield batch.filter(pa.array(dead == 0)).select(cols)
+            redo = (dead > 0) & (live > 0)  # all-deleted rows drop out
+            if redo.any():
+                m = keep & redo[row]
+                at = pa.array(np.flatnonzero(redo))
+                yield pa.RecordBatch.from_arrays([
+                    batch.column("term").take(at),
+                    batch.column("shard").take(at),
+                    pa.array(live[redo], pa.int64()),
+                    pa.array(np.bincount(row[m], weights=tfs[m],
+                                         minlength=batch.num_rows)[redo]
+                             .astype(np.int64)),
+                    codec.encode_runs(live[redo], docs[m], tfs[m], dls[m],
+                                      block_size),
+                ], names=cols)
 
     new_name = f"postings_{uuid.uuid4().hex[:12]}"
     new_dir = f"{index_dir}/{new_name}"
     # row-wise rewrite: no repartition — the purge is embarrassingly
     # parallel per posting row, so the corpus-sized blocks never shuffle
-    write_postings(p.mapInPandas(_purge, POSTINGS_SCHEMA), new_dir)
+    write_postings(p.select(*cols).mapInArrow(_purge, POSTINGS_SCHEMA),
+                   new_dir)
 
     # exact stats from the surviving postings (self-healing: no delta
     # arithmetic against possibly-stale old stats). Decode only the
     # (doc, dl) pairs; map-side dedup bounds the shuffle at
     # ~n_live_docs rows.
-    def _doc_dl(pdf_iter):
-        for pdf in pdf_iter:
-            seen: dict[int, int] = {}
-            for blocks in pdf["blocks"]:
-                docs, _, dls = codec.decode_blocks(blocks)
-                for d, dl in zip(docs.tolist(), dls.tolist()):
-                    seen[d] = dl
-            yield pd.DataFrame({"doc_id": list(seen.keys()),
-                                "dl": list(seen.values())})
+    def _doc_dl(batch_iter):
+        import pyarrow as pa
+        for batch in batch_iter:
+            _, docs, _, dls = codec.decode_runs(batch.column("blocks"))
+            doc, first = np.unique(docs, return_index=True)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(doc, pa.int64()), pa.array(dls[first], pa.int64())],
+                names=["doc_id", "dl"])
 
     agg = (spark.read.parquet(new_dir).select("blocks")
-           .mapInPandas(_doc_dl, "doc_id long, dl long")
+           .mapInArrow(_doc_dl, "doc_id long, dl long")
            .groupBy("doc_id").agg(F.first("dl").alias("dl"))
            .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
            .first())

@@ -100,33 +100,55 @@ def swap_positions(index_dir: str, new_name: str) -> None:
 
 # ------------------------------------------------------------------ build
 
-def _encode_pos_blocks(doc: np.ndarray, tf: np.ndarray,
-                       flat_pos: np.ndarray, block_size: int) -> list[dict]:
-    """One term's postings (docs ascending, per-doc position counts tf,
-    positions concatenated in doc order) -> block dicts."""
-    u = codec.to_u64(doc)
-    t = tf.astype(np.uint64)
-    bounds = np.zeros(len(doc) + 1, dtype=np.int64)
-    np.cumsum(tf, out=bounds[1:])
-    blocks = []
-    for s in range(0, len(u), block_size):
-        e = min(s + block_size, len(u))
-        seg = u[s:e]
-        gaps = np.empty(e - s - 1, dtype=np.uint64)
-        np.subtract(seg[1:], seg[:-1], out=gaps)
-        p = flat_pos[bounds[s]:bounds[e]].astype(np.int64)
-        delta = p.copy()
-        delta[1:] -= p[:-1]
-        starts = bounds[s:e] - bounds[s]
-        delta[starts] = p[starts]  # per-doc first position absolute
-        blocks.append({
-            "first_doc": int(doc[s]), "last_doc": int(doc[e - 1]),
-            "n": int(e - s),
-            "docs": codec.encode_stream(gaps),
-            "tfs": codec.encode_stream(t[s:e]),
-            "poss": codec.encode_stream(delta.astype(np.uint64)),
-        })
-    return blocks
+def _encode_pos_runs(run_lens, doc: np.ndarray, tf: np.ndarray,
+                     flat_pos: np.ndarray, block_size: int):
+    """Concatenated term runs (docs ascending within a run, per-doc
+    position counts tf, positions concatenated in doc order) -> the
+    sidecar ``blocks`` column (Arrow), one list of blocks per run, in
+    one ``codec`` stream encode."""
+    import pyarrow as pa
+    doc = np.asarray(doc, dtype=np.int64)
+    tf = np.asarray(tf, dtype=np.int64)
+    n_blocks, blen, bstart = codec.block_layout(run_lens, block_size)
+    p = np.asarray(flat_pos, dtype=np.int64)
+    delta = p.copy()
+    delta[1:] -= p[:-1]
+    first_pos = np.zeros(len(doc), dtype=np.int64)
+    np.cumsum(tf[:-1], out=first_pos[1:])
+    delta[first_pos[tf > 0]] = p[first_pos[tf > 0]]  # per-doc first absolute
+    blk_pos = np.add.reduceat(tf, bstart) if len(bstart) else blen
+    return codec.blocks_column(n_blocks, [
+        ("first_doc", pa.array(doc[bstart], pa.int64())),
+        ("last_doc", pa.array(doc[bstart + blen - 1], pa.int64())),
+        ("n", pa.array(blen, pa.int32())),
+    ], [
+        ("docs", codec.doc_gaps(codec.to_u64(doc), bstart), blen - 1),
+        ("tfs", tf, blen),
+        ("poss", delta, blk_pos),
+    ])
+
+
+def _decode_pos_runs(blocks):
+    """Sidecar ``blocks`` column (Arrow) -> flat (row, doc, tf) per
+    posting plus every position in posting order, all rows at once."""
+    row, f = codec.unpack_blocks(blocks)
+    n = f["n"]
+    doc = codec.block_docs(f["first_doc"], n,
+                           codec.decode_streams(*f["docs"], n - 1))
+    tf = codec.decode_streams(*f["tfs"], n).astype(np.int64)
+    blk_pos = np.add.reduceat(tf, np.append(0, np.cumsum(n)[:-1])) \
+        if len(n) else n
+    delta = codec.decode_streams(*f["poss"], blk_pos).astype(np.int64)
+    return np.repeat(row, n), doc, tf, _positions(delta, tf)
+
+
+def _positions(delta: np.ndarray, tfs: np.ndarray) -> np.ndarray:
+    """Position deltas (each doc's first one absolute) -> positions: a
+    cumulative sum re-anchored at each doc's first position."""
+    c = np.cumsum(delta)
+    starts = np.zeros(len(tfs), dtype=np.int64)
+    np.cumsum(tfs[:-1], out=starts[1:])
+    return c - np.repeat(c[starts] - delta[starts], tfs)
 
 
 def _decode_pos_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -143,13 +165,7 @@ def _decode_pos_block(block) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     tfs = codec.decode_stream(bytes(get("tfs")), n).astype(np.int64)
     npos = int(tfs.sum())
     delta = codec.decode_stream(bytes(get("poss")), npos).astype(np.int64)
-    # segmented cumsum: running sum, re-anchored at each doc's first
-    # position (which was stored absolute)
-    c = np.cumsum(delta)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(tfs[:-1], out=starts[1:])
-    pos = c - np.repeat(c[starts] - delta[starts], tfs)
-    return codec.from_u64(u), tfs, pos
+    return codec.from_u64(u), tfs, _positions(delta, tfs)
 
 
 def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
@@ -157,8 +173,9 @@ def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
 
     tokenize (pyarrow RE2 kernels, the Arrow lockstep impl) -> per-token
     1-based position within its doc -> stable lexsort to (term, doc)
-    runs (positions stay ascending inside each run) -> block encode.
-    Python objects only at fragment/block granularity, never per token.
+    runs (positions stay ascending inside each run) -> block encode of
+    every fragment of the batch in one ``_encode_pos_runs`` call (no
+    Python object per fragment, block or token).
     """
     import pyarrow as pa
     from ..tokenizer import arrow_tokenize_batch
@@ -205,31 +222,13 @@ def _fused_positions_pipe(batch_iter, block_size: int, profile: str):
         tchange[1:] = term_run[1:] != term_run[:-1]
         fstarts = np.flatnonzero(tchange)
         fends = np.append(fstarts[1:], len(rstarts))
-        terms_py = enc.dictionary.take(
-            pa.array(term_run[fstarts])).to_pylist()
-        frags_terms, frags_df, frags_blocks = [], [], []
-        for term, fs, fe in zip(terms_py, fstarts, fends):
-            d = doc_run[fs:fe]
-            t = tf_run[fs:fe]
-            p = pos_s[rstarts[fs]:rends[fe - 1]]
-            frags_terms.append(term)
-            frags_df.append(int(fe - fs))
-            frags_blocks.append(_encode_pos_blocks(d, t, p, block_size))
         yield pa.RecordBatch.from_arrays([
-            pa.array(frags_terms, pa.string()),
-            pa.array([0] * len(frags_terms), pa.int32()),
-            pa.array(frags_df, pa.int64()),
-            pa.array(frags_blocks, type=_arrow_pos_block_type()),
+            enc.dictionary.take(pa.array(term_run[fstarts])),
+            pa.array(np.zeros(len(fstarts), np.int32), pa.int32()),
+            pa.array(fends - fstarts, pa.int64()),
+            _encode_pos_runs(fends - fstarts, doc_run, tf_run, pos_s,
+                             block_size),
         ], names=["term", "shard", "df", "blocks"])
-
-
-def _arrow_pos_block_type():
-    import pyarrow as pa
-    return pa.list_(pa.struct([
-        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-        ("n", pa.int32()),
-        ("docs", pa.binary()), ("tfs", pa.binary()),
-        ("poss", pa.binary())]))
 
 
 def build_positions(docs: DataFrame, index_dir: str, *,
@@ -298,49 +297,40 @@ def compact_positions(spark: SparkSession, index_dir: str, *,
     new_name = f"positions_{uuid.uuid4().hex[:12]}"
     out = f"{index_dir}/{new_name}"
 
-    def merge(pdf_iter):
-        import pandas as pd
-        for pdf in pdf_iter:
-            rows = {"term": [], "shard": [], "df": [], "blocks": []}
-            for (term, shard), g in pdf.groupby(["term", "shard"],
-                                                sort=False):
-                total = int(g["df"].sum())
-                if len(g) == 1 or total > max_merge_docs:
-                    for _, r in g.iterrows():
-                        rows["term"].append(term)
-                        rows["shard"].append(shard)
-                        rows["df"].append(int(r["df"]))
-                        rows["blocks"].append(r["blocks"])
-                    continue
-                ds, ts, ps = [], [], []
-                for blocks in g["blocks"]:
-                    for b in blocks:
-                        d, tf, p = _decode_pos_block(b)
-                        ds.append(d)
-                        ts.append(tf)
-                        ps.append(p)
-                d = np.concatenate(ds)
-                tf = np.concatenate(ts)
-                # positions must follow their doc through the sort:
-                # reorder the flat stream by per-doc slices
-                bounds = np.zeros(len(d) + 1, dtype=np.int64)
-                np.cumsum(tf, out=bounds[1:])
-                p = np.concatenate(ps)
-                order = np.argsort(d, kind="mergesort")
-                p = np.concatenate([p[bounds[i]:bounds[i + 1]]
-                                    for i in order]) if len(order) else p
-                d, tf = d[order], tf[order]
-                rows["term"].append(term)
-                rows["shard"].append(shard)
-                rows["df"].append(int(len(d)))
-                rows["blocks"].append(
-                    _encode_pos_blocks(d, tf, p, block_size))
-            yield pd.DataFrame(rows)
+    def merge(batch_iter):
+        import pyarrow as pa
+        from .build import _merge_plan
+        keys = ["term", "shard"]
+        cols = ["term", "shard", "df", "blocks"]
+        for keep, sub, sizes in _merge_plan(batch_iter, keys,
+                                            max_merge_docs):
+            if keep.num_rows:
+                yield keep.select(cols)
+            if not sub.num_rows:
+                continue
+            row, d, tf, p = _decode_pos_runs(sub.column("blocks"))
+            group = np.repeat(np.arange(len(sizes)), sizes)[row]
+            order = np.lexsort((d, group))
+            # positions follow their doc through the sort: gather each
+            # doc's slice of the flat stream in the new doc order
+            at = np.zeros(len(tf), dtype=np.int64)
+            np.cumsum(tf[:-1], out=at[1:])
+            tf = tf[order]
+            p = p[np.repeat(at[order], tf) + np.arange(len(p))
+                  - np.repeat(np.cumsum(tf) - tf, tf)]
+            lens = np.bincount(group, minlength=len(sizes))
+            firsts = pa.array(np.append(0, np.cumsum(sizes)[:-1]))
+            yield pa.RecordBatch.from_arrays([
+                sub.column("term").take(firsts),
+                sub.column("shard").take(firsts),
+                pa.array(lens, pa.int64()),
+                _encode_pos_runs(lens, d[order], tf, p, block_size),
+            ], names=cols)
 
     (spark.read.parquet(cur)
      .repartition("term", "shard")
      .sortWithinPartitions("term", "shard")
-     .mapInPandas(merge, POSITIONS_SCHEMA)
+     .mapInArrow(merge, POSITIONS_SCHEMA)
      .write.mode("overwrite").parquet(out))
     swap_positions(index_dir, new_name)
 

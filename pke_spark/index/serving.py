@@ -235,16 +235,26 @@ def expand_regex_indexed(ix: IndexReader, pattern: str,
     dictionary — whole-term RE2 match (``^(?:pattern)$``, the engine of
     DuckDB's ``regexp_full_match``), best-effort literal-prefix range
     gate (none: the whole dictionary, Lucene's automaton worst case).
-    Parity: ``ops.termexpand.expand_regex``."""
+    Parity: ``ops.termexpand.expand_regex``.
+
+    A pattern must compile in both Python ``re`` (the twin's check) and
+    RE2, the engine of the match: RE2 has no lookaround (``(?=``,
+    ``(?!``, ``(?<=``, ``(?<!``), no backreferences (``\\1``) and no
+    possessive or atomic groups. Anything else raises ``ValueError``
+    up front, whether or not a row group holds a candidate term (RE2
+    compiles a pattern only when it meets a value, so one probe string
+    makes it fail here rather than at the first candidate)."""
     import re as _re
 
     from ..ops.termexpand import regex_prefix
+    full = f"^(?:{pattern})$"
     try:
         _re.compile(pattern)
-    except _re.error as e:
+        pc.match_substring_regex(pa.array([""]), full)
+    except (_re.error, pa.ArrowInvalid) as e:
         raise ValueError(f"bad regex {pattern!r}: {e}") from e
     return _expand(ix, regex_prefix(pattern), max_expansions,
-                   ("match_substring_regex", f"^(?:{pattern})$"))
+                   ("match_substring_regex", full))
 
 
 def _clause_expansions(ix: IndexReader, pq: ParsedQuery,

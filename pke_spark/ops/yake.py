@@ -321,14 +321,14 @@ def yake_doc(sentences: list[list[str]], stopset: set, k: int,
     best = sorted(weights, key=lambda c: (weights[c], c))
     sel: list[str] = []
     for c in best:
+        if len(sel) >= k:  # before the first append too: k <= 0 keeps none
+            break
         if any(1.0 - levenshtein(c, p, _dedup_cap(max(len(c), len(p)),
                                                   threshold))
                / max(len(c), len(p)) > threshold
                for p in sel):
             continue
         sel.append(c)
-        if len(sel) >= k:
-            break
     return [(c, round(weights[c], 6)) for c in sel]
 
 

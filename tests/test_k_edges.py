@@ -14,8 +14,12 @@ RANKERS = {
     "kpminer": keyphrase.kpminer,
     "kpminer_dedup": keyphrase.kpminer_dedup,
     "yake_lite": yake.yake_lite,
+    "yake_full": yake.yake_full,
     "textrank_topk": graph.textrank_topk,
     "textrank_top_percent": graph.textrank_top_percent,
+    "singlerank_topk": graph.singlerank_topk,
+    "positionrank_topk": graph.positionrank_topk,
+    "tfidf_topk": keyphrase.tfidf_topk,
     "topicrank_topk": topicrank.topicrank_topk,
     "multipartiterank_topk": topicrank.multipartiterank_topk,
     "topical_pagerank_topk": lambda docs, k: tpr.topical_pagerank_topk(

@@ -40,7 +40,8 @@ def test_pos_block_roundtrip(doclists, block_size):
     doc = np.cumsum([g for g, _ in doclists]).astype(np.int64) - (1 << 39)
     tf = np.array([len(p) for _, p in doclists], dtype=np.int64)
     flat = np.concatenate([np.sort(p) for _, p in doclists]).astype(np.int64)
-    blocks = PX._encode_pos_blocks(doc, tf, flat, block_size)
+    blocks = PX._encode_pos_runs([len(doc)], doc, tf, flat,
+                                 block_size).to_pylist()[0]
     d_all, t_all, p_all = [], [], []
     for b in blocks:
         d, t, p = PX._decode_pos_block(b)

@@ -231,6 +231,19 @@ def test_expansions_with_no_match_are_empty(fx_ix):
     assert SV.expand_prefix_indexed(fx_ix, "al", max_expansions=0) == []
 
 
+@pytest.mark.parametrize("prefix, candidates", [("al", True), ("zzz", False)])
+@pytest.mark.parametrize("tail", ["(?=p)", "(p)\\1"])
+def test_regex_outside_re2_is_a_value_error(fx_ix, prefix, candidates, tail):
+    """Lookahead and backreferences compile in Python ``re`` but not in
+    RE2: the expansion rejects them with ValueError both when a row
+    group holds a candidate term and when none does (RE2 would only
+    have seen the pattern in the first case)."""
+    assert bool(fx_ix._row_groups_in(prefix, prefix + "\U0010ffff")) \
+        == candidates
+    with pytest.raises(ValueError, match="bad regex"):
+        SV.expand_regex_indexed(fx_ix, prefix + tail)
+
+
 # ------------------------------------------------------ 2. sf0.001 parity
 
 def _rows3(df):
