@@ -860,33 +860,79 @@ def _encode_runs(batch_iter, block_size: int, remap_bc=None):
         yield from flush(buf)
 
 
-def _whole_groups(batch_iter, keys: list[str]):
-    """Re-cut a stream of Arrow batches sorted by ``keys`` so that no
-    key group spans two batches: each batch's trailing group waits for
-    the next one. Spark cuts a partition every maxRecordsPerBatch rows,
-    wherever a group happens to lie."""
+def _group_starts(batch, keys: list[str]):
+    """Row indices where a key group starts in a batch sorted by
+    ``keys`` (row 0 always does)."""
     import numpy as np
+    import pyarrow.compute as pc
+    n = batch.num_rows
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for k in keys:
+        col = batch.column(k)
+        change[1:] |= pc.not_equal(col.slice(1), col.slice(0, n - 1)
+                                   ).to_numpy(zero_copy_only=False)
+    return np.flatnonzero(change)
+
+
+def _whole_groups(batch_iter, keys: list[str], max_merge_docs: int):
+    """Re-cut a stream of Arrow batches sorted by ``keys`` so that no
+    key group spans two batches. Spark cuts a partition every
+    maxRecordsPerBatch rows, wherever a group happens to lie, so each
+    batch's trailing group is held, as a list of slices concatenated
+    once when the group ends. Yields (batch, whole). ``whole`` is False
+    for rows of a group whose summed ``df`` has passed
+    ``max_merge_docs``: that group passes through unmerged anyway, so
+    its rows go out as they arrive and no more of it is held."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    carry = None
+
+    def concat(parts):
+        if len(parts) == 1:
+            return parts[0]
+        return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+
+    def df_sum(b):
+        return pc.sum(b.column("df")).as_py() or 0
+
+    def opens_with(batch, ref):
+        return all(pc.equal(batch.column(k)[0],
+                            ref.column(k)[ref.num_rows - 1]).as_py()
+                   for k in keys)
+
+    held, held_df = [], 0
+    passing = None   # last row of a group that is passing through
     for batch in batch_iter:
-        if carry is not None:
-            batch = pa.Table.from_batches(
-                [carry, batch]).combine_chunks().to_batches()[0]
         n = batch.num_rows
         if n == 0:
             continue
-        tail = np.ones(n, dtype=bool)
-        for k in keys:
-            col = batch.column(k)
-            tail &= pc.equal(col, col[n - 1]).to_numpy(zero_copy_only=False)
-        head = np.flatnonzero(~tail)
-        cut = int(head[-1]) + 1 if len(head) else 0
-        if cut:
-            yield batch.slice(0, cut)
-        carry = batch.slice(cut)
-    if carry is not None:
-        yield carry
+        starts = _group_starts(batch, keys)
+        ref = held[-1] if held else passing
+        cont = 0
+        if ref is not None and opens_with(batch, ref):
+            cont = int(starts[1]) if len(starts) > 1 else n
+        if cont and passing is not None:
+            yield batch.slice(0, cont), False
+        elif cont:
+            held.append(batch.slice(0, cont))
+            held_df += df_sum(held[-1])
+        if cont < n:
+            # the pending group ended: it goes out with this batch's
+            # whole groups, and the batch's last group is held
+            passing = None
+            tail = int(starts[-1])
+            out = held + ([batch.slice(cont, tail - cont)]
+                          if tail > cont else [])
+            if out:
+                yield concat(out), True
+            held = [batch.slice(tail)]
+            held_df = df_sum(held[0])
+        if held and held_df > max_merge_docs:
+            passing = held[-1].slice(held[-1].num_rows - 1)
+            yield concat(held), False
+            held, held_df = [], 0
+    if held:
+        yield concat(held), True
 
 
 def _merge_plan(batch_iter, keys: list[str], max_merge_docs: int):
@@ -894,19 +940,17 @@ def _merge_plan(batch_iter, keys: list[str], max_merge_docs: int):
     (rows passing through untouched, rows to merge, the row count of
     each group to merge). Single-row groups and groups above
     ``max_merge_docs`` pass through: fragments are valid additive rows,
-    so a 10^12-scale mega-term never has to fit one task."""
+    so a 10^12-scale mega-term never has to fit one task (its rows
+    stream through, see ``_whole_groups``)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    for batch in _whole_groups(batch_iter, keys):
+    for batch, whole in _whole_groups(batch_iter, keys, max_merge_docs):
+        if not whole:
+            yield batch, batch.slice(0, 0), np.zeros(0, dtype=np.int64)
+            continue
         n = batch.num_rows
-        change = np.zeros(n, dtype=bool)
-        change[0] = True
-        for k in keys:
-            col = batch.column(k)
-            change[1:] |= pc.not_equal(col.slice(1), col.slice(0, n - 1)
-                                       ).to_numpy(zero_copy_only=False)
-        starts = np.flatnonzero(change)
+        starts = _group_starts(batch, keys)
         sizes = np.diff(np.append(starts, n))
         df = batch.column("df").to_numpy(zero_copy_only=False)
         merge_g = (sizes > 1) & (np.add.reduceat(df, starts)

@@ -250,7 +250,9 @@ def expand_regex_indexed(ix: IndexReader, pattern: str,
     full = f"^(?:{pattern})$"
     try:
         _re.compile(pattern)
-        pc.match_substring_regex(pa.array([""]), full)
+        pool = pa.system_memory_pool()   # as in _expand
+        pc.match_substring_regex(pa.array([""], memory_pool=pool), full,
+                                 memory_pool=pool)
     except (_re.error, pa.ArrowInvalid) as e:
         raise ValueError(f"bad regex {pattern!r}: {e}") from e
     return _expand(ix, regex_prefix(pattern), max_expansions,

@@ -2,9 +2,11 @@
 term per call against one segmented call for all terms.
 
 The postings are synthetic and seeded: Zipf-distributed term dfs (capped
-at ``--max-df``) over dense doc ordinals (the layout a dense build encodes), geometric tfs
-and uniform doc lengths. Each form is timed ``--repeat`` times on the
-same input and the median is kept:
+at ``MAX_DF``) over dense doc ordinals (the layout a dense build
+encodes), geometric tfs and uniform doc lengths. The input is fixed
+(the constants below, also written into the record's ``input``), so
+every ``codec_*.json`` measures the same thing. Each form is timed
+``REPEAT`` times and the median is kept:
 
 - ``per_term``: ``codec.encode_blocks`` and ``codec.decode_blocks`` once
   per term (the shape of every write path before the segmented kernels,
@@ -15,7 +17,7 @@ same input and the median is kept:
 Both forms must decode to the input; the script exits non-zero if not.
 Usage (from any directory; it imports the checkout it sits in):
 
-    python scripts/codec_bench.py --tag <tag> [--postings 2000000]
+    python scripts/codec_bench.py --tag <tag>
 
 writes ``benchmarks/codec_<tag>.json``.
 """
@@ -36,6 +38,12 @@ sys.path.insert(0, ROOT)
 import numpy as np  # noqa: E402
 
 from pke_spark.index import codec  # noqa: E402
+
+POSTINGS = 2_000_000
+DOCS = 200_000
+MAX_DF = 8_000
+SEED = 3
+REPEAT = 3
 
 
 def synth_postings(n_postings: int, n_docs: int, max_df: int, seed: int):
@@ -67,28 +75,21 @@ def _median_s(fn, repeat: int):
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--tag", required=True)
-    ap.add_argument("--postings", type=int, default=2_000_000)
-    ap.add_argument("--docs", type=int, default=200_000)
-    ap.add_argument("--max-df", type=int, default=8_000)
-    ap.add_argument("--seed", type=int, default=3)
-    ap.add_argument("--repeat", type=int, default=3)
     args = ap.parse_args()
 
-    lens, doc, tf, dl = synth_postings(args.postings, args.docs,
-                                   args.max_df, args.seed)
+    lens, doc, tf, dl = synth_postings(POSTINGS, DOCS, MAX_DF, SEED)
     cuts = np.cumsum(lens)[:-1]
     terms = list(zip(np.split(doc, cuts), np.split(tf, cuts),
                      np.split(dl, cuts)))
 
     enc_term_s, per_term = _median_s(
         lambda: [codec.encode_blocks(d, t, l) for d, t, l in terms],
-        args.repeat)
+        REPEAT)
     enc_seg_s, col = _median_s(lambda: codec.encode_runs(lens, doc, tf, dl),
-                               args.repeat)
+                               REPEAT)
     dec_term_s, dec_term = _median_s(
-        lambda: [codec.decode_blocks(b) for b in per_term], args.repeat)
-    dec_seg_s, dec_seg = _median_s(lambda: codec.decode_runs(col),
-                                   args.repeat)
+        lambda: [codec.decode_blocks(b) for b in per_term], REPEAT)
+    dec_seg_s, dec_seg = _median_s(lambda: codec.decode_runs(col), REPEAT)
 
     ok = (all(np.array_equal(a, b) for a, b in zip(dec_seg[1:],
                                                    (doc, tf, dl)))
@@ -105,9 +106,8 @@ def main() -> int:
                  "numpy": np.__version__},
         "input": {"postings": int(lens.sum()), "terms": len(lens),
                   "blocks": sum(len(b) for b in per_term),
-                  "docs": args.docs, "max_df": args.max_df,
-                  "seed": args.seed,
-                  "repeat": args.repeat},
+                  "docs": DOCS, "max_df": MAX_DF, "seed": SEED,
+                  "repeat": REPEAT},
         "per_term": {"encode_s": round(enc_term_s, 3),
                      "decode_s": round(dec_term_s, 3)},
         "segmented": {"encode_s": round(enc_seg_s, 3),

@@ -91,3 +91,54 @@ def test_merges_join_terms_cut_across_arrow_batches(spark, tmp_path,
     assert pos_after == pos_before
     assert set(rows_after.values()) == {1}
     assert set(pos_rows_after.values()) == {1}
+
+
+def _cut(keys, dfs, cuts):
+    """One batch per slice between consecutive cut points."""
+    import pyarrow as pa
+    tbl = pa.table({"term": keys, "df": pa.array(dfs, pa.int64())})
+    bounds = [0, *cuts, len(keys)]
+    return [tbl.slice(a, b - a).combine_chunks().to_batches()[0]
+            if b > a else tbl.slice(0, 0).to_batches()[0]
+            for a, b in zip(bounds, bounds[1:])]
+
+
+@pytest.mark.parametrize("seed", range(40))
+def test_whole_groups_cut_anywhere(seed):
+    """Every group under ``max_merge_docs`` comes out whole in one
+    batch; a group over it streams out in pieces flagged not whole,
+    so no batch out holds more than the cap plus one batch in."""
+    from pke_spark.index.build import _merge_plan, _whole_groups
+    rnd = random.Random(seed)
+    keys, dfs = [], []
+    for g in range(rnd.randint(1, 12)):
+        n = rnd.choice([1, 2, 3, 9, 40])
+        keys += [f"t{g:02d}"] * n
+        dfs += [rnd.randint(1, 5) for _ in range(n)]
+    cap, batch = rnd.choice([4, 20, 1000]), rnd.randint(1, 8)
+    cuts = sorted(rnd.sample(range(1, len(keys)), min(len(keys) - 1,
+                                                      len(keys) // batch)))
+    widest = max(b - a for a, b in zip([0, *cuts], [*cuts, len(keys)]))
+    total = {}
+    for k, df in zip(keys, dfs):
+        total[k] = total.get(k, 0) + df
+
+    out = list(_whole_groups(_cut(keys, dfs, cuts), ["term"], cap))
+    assert [k for b, _ in out for k in b.column("term").to_pylist()] == keys
+    seen = {}
+    for b, whole in out:
+        for k in set(b.column("term").to_pylist()):
+            seen.setdefault(k, []).append(whole)
+        assert sum(b.column("df").to_pylist()) <= cap + 5 * widest
+    for k, flags in seen.items():
+        if total[k] <= cap:
+            assert flags == [True], k
+
+    merged = {}
+    for keep, sub, sizes in _merge_plan(_cut(keys, dfs, cuts), ["term"],
+                                        cap):
+        assert sum(sizes) == sub.num_rows
+        for k in sub.column("term").to_pylist():
+            merged[k] = merged.get(k, 0) + 1
+    assert merged == {k: keys.count(k) for k in total
+                      if keys.count(k) > 1 and total[k] <= cap}
