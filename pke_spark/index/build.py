@@ -421,6 +421,22 @@ def _encode_partition(batch_iter, block_size: int):
         ], names=["term", "shard", "df", "cf", "blocks"])
 
 
+def _old_tombstones(index_dir: str) -> list[str]:
+    """Tombstone files present before a fresh build: they name docs of
+    the corpus being replaced (by ordinal on a dense index), so the
+    build drops them with ``_drop_tombstones`` once its own postings
+    are in place — left behind, they would hide the new corpus's docs
+    at the same ordinals or ids."""
+    from .delete import _tombstone_files  # lazy: delete imports build
+    return _tombstone_files(index_dir)
+
+
+def _drop_tombstones(index_dir: str, files: list[str]) -> None:
+    if files:
+        from .delete import clear_tombstones
+        clear_tombstones(index_dir, files)
+
+
 def build_index(docs: DataFrame, index_dir: str, *,
                 n_parts: int = 8, n_salts: int = 8,
                 dense_doc_ids: bool = False,
@@ -448,6 +464,7 @@ def build_index(docs: DataFrame, index_dir: str, *,
     spark = docs.sparkSession
     build_id = uuid.uuid4().hex[:12]
     dyn = {"partitionOverwriteMode": "dynamic"}
+    stale = [] if resume else _old_tombstones(index_dir)
     if not resume:
         # A fresh build over an existing index_dir is a REBUILD: drop
         # state owned by the previous build so it cannot leak into this
@@ -545,6 +562,7 @@ def build_index(docs: DataFrame, index_dir: str, *,
         dense_doc_ids=dense_doc_ids, merge_runs=merge_runs)
     write_stats(index_dir, n_docs, avgdl, int(hot_threshold), block_size,
                 profile=profile)
+    _drop_tombstones(index_dir, stale)
     _append_manifest(spark, index_dir, [(
         build_id, "postings", -1, "done", n_docs,
         _postings_term_count(index_dir),
@@ -595,6 +613,7 @@ def build_index_teed(docs: DataFrame, index_dir: str, *,
     new_name = out_name if out_name is not None else f"postings_{build_id}"
     new_dir = f"{index_dir}/{new_name}"
     seg_dir = f"{index_dir}/segments"
+    stale = _old_tombstones(index_dir)
     shutil.rmtree(seg_dir, ignore_errors=True)
     shutil.rmtree(f"{index_dir}/segments_stream", ignore_errors=True)
     os.makedirs(seg_dir, exist_ok=True)
@@ -712,6 +731,7 @@ def build_index_teed(docs: DataFrame, index_dir: str, *,
         swap_postings(index_dir, new_name)
     write_stats(index_dir, int(n_docs), avgdl, int(hot_threshold),
                 block_size, profile=profile)
+    _drop_tombstones(index_dir, stale)
     _append_manifest(spark, index_dir, [(
         build_id, "postings_teed", -1, "done", int(n_docs),
         _postings_term_count(index_dir),
@@ -750,6 +770,7 @@ def build_index_direct(docs: DataFrame, index_dir: str, *,
     # queryable instead of deleted (ADVICE r3).
     new_name = f"postings_{build_id}"
     new_dir = f"{index_dir}/{new_name}"
+    stale = _old_tombstones(index_dir)
 
     prepared = docs.select(F.lit(0).alias("part"),
                            F.col(id_col).alias("doc_id"),
@@ -781,6 +802,7 @@ def build_index_direct(docs: DataFrame, index_dir: str, *,
     swap_postings(index_dir, new_name)
     write_stats(index_dir, int(n_docs), avgdl, int(hot_threshold),
                 block_size)
+    _drop_tombstones(index_dir, stale)
     _append_manifest(spark, index_dir, [(
         build_id, "postings_direct", -1, "done", int(n_docs),
         _postings_term_count(index_dir),

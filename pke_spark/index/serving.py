@@ -22,16 +22,18 @@ Physical shapes:
   mask — range, LIKE, RE2 regex, or the fuzzy length band — before a
   numpy edit distance, df sum, ranking and cap. No query engine runs:
   Lucene's MultiTermQuery rewrite against its terms dict.
-- **query-string execution**: expansions + literal terms score via the
-  reader's decoded-postings LRU (sorted-array accumulation, the
-  ``_driver_rows`` discipline); MUST / MUST_NOT are sorted-array set
-  ops on posting doc arrays; phrase clauses decode only their terms'
-  positional blocks (a Spark job over the sidecar — the one part of a
-  query that is corpus-sized in the worst case); metadata filters
-  resolve to a doc-set once per query (Lucene's filter bitset), via
-  one DuckDB scan of the documents parquet, translated to ordinals by
-  binary search on the reader's resident docmap when the index is
-  dense.
+- **query-string execution**: one candidate-set algebra,
+  ``_candidates`` (min_should_match, MUST, groups, MUST_NOT as
+  sorted-array set ops on posting doc arrays), and one numpy BM25
+  scorer, ``_BatchScorer``, serve every driver path — single query,
+  batch, expansions, MLT, ``wand.search`` / ``boolean_search`` — and
+  every bucket task of the distributed plan. Phrase clauses decode
+  only their terms' positional blocks (a Spark job over the sidecar —
+  the one part of a query that is corpus-sized in the worst case);
+  metadata filters resolve to a doc-set once per query (Lucene's
+  filter bitset), via one DuckDB scan of the documents parquet,
+  translated to ordinals by binary search on the reader's resident
+  docmap when the index is dense.
 - **snippets**: top-k first, then positional blocks for (query terms x
   k docs) only — the match-position table is tiny by construction.
 
@@ -42,6 +44,8 @@ driver memory falls back to the distributed scorer for ranking
 """
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 import pyarrow as pa
@@ -55,7 +59,7 @@ from ..ops.querylang import (ParsedQuery, filters_condition,
 from .build import IndexReader
 from ..rows import rows_df
 from .positions import term_positions
-from .wand import B, K1, _idf, _translate_rows
+from .wand import B, K1, _bm25_columns, _idf, _translate_rows
 
 
 
@@ -353,143 +357,205 @@ def _slop_doc_set(ix: IndexReader, terms: list[str],
         f"slop{int(slop)}:" + "\x1f".join(terms), compute)
 
 
-# ------------------------------------------------------------- scoring
+# ------------------------------------------------- candidates and scoring
 
-def _score_candidates(ix: IndexReader, score_terms: list[str],
-                      cand: np.ndarray | None, k: int,
-                      k1: float, b: float,
-                      boosts: dict | None = None
-                      ) -> list[tuple[int, int, float]]:
-    """BM25 over ``score_terms`` restricted to ``cand`` (posting-space;
-    None = union of the score terms' postings). Fixed summation order,
-    6-decimal rounding, (score DESC, doc_id ASC) — the ``_driver_rows``
-    discipline, so scores are bit-identical to every other path.
-    ``boosts`` (term -> summed clause weight) multiplies each term's
-    contribution — the driver twin of the kernel's boost column."""
-    dfs = ix.term_dfs(sorted(set(score_terms)))
-    live = sorted(dfs)
-    if not live:
-        return []
-    posts = ix.decoded_postings(live)
-    live = [t for t in live if len(posts[t][0])]
-    if not live:
-        return []
-    if cand is None:
-        cand = np.unique(np.concatenate([posts[t][0] for t in live]))
-    else:
-        cand = np.unique(np.asarray(cand, dtype=np.int64))
-    if not len(cand):
-        return []
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    hit = np.zeros(len(cand), dtype=bool)
-    acc = np.zeros(len(cand), dtype=np.float64)
-    for t in live:
-        d, tf, dl = posts[t]
-        # membership of d in the SORTED cand via one binary search —
-        # np.isin sort-merges both arrays per call and dominated the
-        # batched driver profile at multi-million-row unions
-        idx = np.searchsorted(cand, d)
-        idx[idx == len(cand)] = 0
-        m = cand[idx] == d
-        if not m.any():
-            continue
-        idf = _idf(int(n), dfs[t])
-        if boosts is not None:
-            idf *= float(boosts.get(t, 1.0))
-        tff = tf[m].astype(np.float64)
-        dlf = dl[m].astype(np.float64)
-        c = idf * (tff * (k1 + 1.0)) / \
-            (tff + k1 * (1.0 - b + b * dlf / avgdl))
-        idx = idx[m]
-        acc[idx] += c
-        hit[idx] = True
-    docs = cand[hit]
-    scores = np.round(acc[hit], 6)
-    order = _topk_order(docs, scores, k)
-    out = [(i + 1, int(docs[j]), float(scores[j]))
-           for i, j in enumerate(order)]
-    if ix.dense:
-        out = _translate_rows(ix, out)
-    return [(r, int(d), float(s)) for r, d, s in out]
+def _candidates(pq: ParsedQuery, exp_lists: list, min_should_match: int,
+                docs_of, score_terms: list[str], required=(),
+                excluded=()) -> np.ndarray | None:
+    """The posting-set algebra of every driver path and of every bucket
+    task: min_should_match, MUST, the required groups, then the
+    ``required`` doc sets, less the MUST_NOT postings and the
+    ``excluded`` doc sets.
+
+    ``docs_of(terms)`` gives the sorted, non-empty posting doc arrays of
+    those ``terms`` that have postings — the reader's decoded-postings
+    LRU on the driver, a bucket's decoded doc range on an executor.
+    ``required`` / ``excluded`` carry the positional and metadata-filter
+    sets, which only the driver computes; both are consumed lazily, so
+    no set is computed once the candidates are empty.
+
+    Returns the sorted posting-space candidates, None when no clause
+    constrains (every doc with a score-term posting is a candidate), or
+    an empty array when nothing can match."""
+    nothing = np.empty(0, dtype=np.int64)
+    cand = None
+
+    def narrow(doc_set: np.ndarray) -> np.ndarray:
+        if cand is None:
+            return np.sort(np.asarray(doc_set, dtype=np.int64))
+        return np.intersect1d(cand, doc_set, assume_unique=True)
+
+    if min_should_match:
+        if min_should_match > pq.n_should_clauses:
+            return nothing  # Lucene BooleanQuery semantics
+        clause_sets = []
+        for terms, need in (pq.should_clauses
+                            + [(sorted(set(ts)), 1) for ts in exp_lists]):
+            arrs = docs_of(terms)
+            if len(arrs) < need:
+                continue
+            if need == 1:
+                clause_sets.append(np.unique(np.concatenate(arrs)))
+            else:  # soft phrase: a doc needs ALL its distinct tokens
+                s = arrs[0]
+                for a in arrs[1:]:
+                    s = np.intersect1d(s, a, assume_unique=True)
+                clause_sets.append(s)
+        docs_u, counts = np.unique(
+            np.concatenate(clause_sets) if clause_sets else nothing,
+            return_counts=True)
+        cand = docs_u[counts >= min_should_match]
+        if not len(cand):
+            return nothing
+    musts = sorted(set(pq.must))
+    must_sets = docs_of(musts) if musts else []
+    if len(must_sets) < len(musts):
+        return nothing  # a required term has no postings
+    group_sets = (np.unique(np.concatenate(arrs)) if arrs else nothing
+                  for arrs in (docs_of(sorted(set(ts)))
+                               for ts, _gb in pq.must_any))
+    for doc_set in itertools.chain(must_sets, group_sets, required):
+        cand = narrow(doc_set)
+        if not len(cand):
+            return nothing
+    excl = docs_of(sorted(set(pq.must_not))) if pq.must_not else []
+    excl += [s for s in excluded if len(s)]
+    if excl:
+        if cand is None:
+            arrs = docs_of(score_terms)
+            if not arrs:
+                return nothing
+            cand = np.unique(np.concatenate(arrs))
+        cand = cand[~np.isin(cand, np.unique(np.concatenate(excl)),
+                             assume_unique=True)]
+    return cand
+
+
+def _driver_docs(ix: IndexReader):
+    """The driver's ``docs_of`` for ``_candidates``: posting doc arrays
+    from the reader's decoded-postings LRU (tombstones applied)."""
+    def docs_of(terms: list[str]) -> list[np.ndarray]:
+        posts = ix.decoded_postings(sorted(ix.term_dfs(terms)))
+        return [d for d, _tf, _dl in posts.values() if len(d)]
+    return docs_of
+
+
+def _driver_candidates(ix: IndexReader, pq: ParsedQuery, exp_lists: list,
+                       score_terms: list[str], docs_parquet: str | None,
+                       min_should_match: int) -> np.ndarray | None:
+    """``_candidates`` on the driver, with the clauses only the driver
+    evaluates: phrase and sloppy-phrase sets off the positional sidecar,
+    the metadata filter set, and negated phrases."""
+    if pq.filters and docs_parquet is None:
+        raise ValueError(
+            "query has field filters; pass docs_parquet (the index "
+            "stores no document metadata)")
+
+    def required():
+        for ph in pq.phrases:
+            yield _phrase_doc_set(ix, ph)
+        for terms, slop in pq.slop_phrases:
+            yield _slop_doc_set(ix, terms, slop)
+        if pq.filters:
+            yield _metadata_filter_set(ix, docs_parquet, pq.filters)
+
+    return _candidates(pq, exp_lists, min_should_match, _driver_docs(ix),
+                       score_terms, required(),
+                       (_phrase_doc_set(ix, ph) for ph in pq.not_phrases))
 
 
 class _BatchScorer:
-    """Shared-term scorer for the batched driver path: the per-term
-    work _score_candidates repeats for every query — positions of the
-    term's postings inside the sorted candidate union, and the two
-    BM25 factor arrays — is precomputed ONCE per distinct term and
-    reused by every query in the batch. Per query, scoring is then two
-    fused array ops per term over one reused accumulator.
+    """The one numpy BM25 scorer: every driver path and every bucket
+    task of the distributed plan ranks through it.
 
-    Bit-exactness: the per-row expression is evaluated with the same
-    tree as ``_score_candidates`` — ``(idf*boost) * A / B`` with
-    A = tf*(k1+1) and B = tf + k1*(1-b+b*dl/avgdl) — in the same
-    sorted-term order, followed by the same round-to-6 and
-    (score DESC, doc_id ASC) selection, so batched and single-query
-    driver results are float-identical (parity-tested)."""
+    Built from a ``{term: (docs, tf, dl)}`` postings dict (sorted docs:
+    the reader's decoded-postings LRU on the driver, a bucket's decoded
+    doc range on an executor) plus the global dfs, ``n_docs`` and
+    ``avgdl``. A term's two BM25 factor arrays are computed once and
+    reused by every query of a batch that scores it. With a candidate
+    set, only the postings inside it are weighed, so a ``+rare head``
+    query never accumulates the head term's whole list.
 
-    def __init__(self, ix: IndexReader, terms: list[str],
-                 k1: float, b: float):
-        self.ix = ix
-        dfs = ix.term_dfs(sorted(set(terms)))
-        posts = ix.decoded_postings(sorted(dfs))
-        avgdl = float(ix.avgdl)
-        self.n = int(ix.n_docs)
+    Bit-exactness: per posting the contribution is ``(idf*boost) * A / B``
+    with A = tf*(k1+1) and B = tf + k1*(1-b+b*dl/avgdl) — the factors
+    of the Column weight (``ops.core.bm25_exprs``) — added per doc in
+    sorted-term order, rounded to 6 decimals and ranked (score DESC,
+    doc ASC), so every path's scores are float-identical. Doc ids stay
+    in posting space: translating dense ordinals is the caller's."""
+
+    def __init__(self, posts: dict, dfs: dict, n_docs: int, avgdl: float,
+                 k1: float = K1, b: float = B):
+        self.posts = posts
         self.dfs = dfs
-        docs_arrays = [posts[t][0] for t in sorted(dfs)
-                       if len(posts[t][0])]
-        self.union = (np.unique(np.concatenate(docs_arrays))
-                      if docs_arrays else np.empty(0, np.int64))
-        self.pos: dict = {}
-        self.A: dict = {}
-        self.B: dict = {}
-        for t in sorted(dfs):
-            d, tf, dl = posts[t]
-            if not len(d):
-                continue
-            self.pos[t] = np.searchsorted(self.union, d)
+        self.n = int(n_docs)
+        self.avgdl = float(avgdl)
+        self.k1, self.b = k1, b
+        self._factors: dict = {}
+
+    def _ab(self, t: str) -> tuple:
+        if t not in self._factors:
+            k1, b = self.k1, self.b
+            _d, tf, dl = self.posts[t]
             tff = tf.astype(np.float64)
             dlf = dl.astype(np.float64)
-            self.A[t] = tff * (k1 + 1.0)
-            self.B[t] = tff + k1 * (1.0 - b + b * dlf / avgdl)
-        self._acc = np.zeros(len(self.union), dtype=np.float64)
-        self._hit = np.zeros(len(self.union), dtype=bool)
+            self._factors[t] = (tff * (k1 + 1.0),
+                                tff + k1 * (1.0 - b + b * dlf / self.avgdl))
+        return self._factors[t]
 
-    def score(self, score_terms: list[str], cand: np.ndarray | None,
-              k: int, boosts: dict | None = None
-              ) -> list[tuple[int, int, float]]:
-        live = [t for t in sorted(set(score_terms)) if t in self.pos]
-        if not live or not len(self.union):
+    def score(self, terms: list[str], cand: np.ndarray | None, k: int,
+              boosts: dict | None = None) -> list[tuple[int, int, float]]:
+        """(rank, doc, score) top-k over ``terms`` among ``cand`` (sorted
+        unique posting-space ids; None = every doc with a posting of the
+        terms). ``boosts`` (term -> summed clause weight) multiplies
+        each term's contribution. No rows for k <= 0."""
+        live = [t for t in sorted(set(terms))
+                if t in self.posts and len(self.posts[t][0])]
+        if k <= 0 or not live:
             return []
-        acc, hit = self._acc, self._hit
-        acc.fill(0.0)
-        hit.fill(False)
+        docs = (np.unique(np.concatenate([self.posts[t][0] for t in live]))
+                if cand is None else cand)
+        if not len(docs):
+            return []
+        acc = np.zeros(len(docs), dtype=np.float64)
+        hit = np.zeros(len(docs), dtype=bool)
         for t in live:
+            d = self.posts[t][0]
+            a, bt = self._ab(t)
+            idx = np.searchsorted(docs, d)
+            if cand is not None:  # weigh only the postings inside cand
+                idx[idx == len(docs)] = 0
+                m = docs[idx] == d
+                idx, a, bt = idx[m], a[m], bt[m]
+                hit[idx] = True
             idf = _idf(self.n, self.dfs[t])
             if boosts is not None:
                 idf *= float(boosts.get(t, 1.0))
-            p = self.pos[t]
-            acc[p] += idf * self.A[t] / self.B[t]
-            hit[p] = True
-        if cand is None:
-            sel = hit
-        else:
-            cm = np.zeros(len(self.union), dtype=bool)
-            cp = np.searchsorted(self.union, cand)
-            cp_ok = cp < len(self.union)
-            cp = cp[cp_ok]
-            cm[cp[self.union[cp] == np.asarray(cand)[cp_ok]]] = True
-            sel = hit & cm
-        docs = self.union[sel]
-        if not len(docs):
-            return []
-        scores = np.round(acc[sel], 6)
-        order = _topk_order(docs, scores, k)
-        out = [(i + 1, int(docs[j]), float(scores[j]))
-               for i, j in enumerate(order)]
-        if self.ix.dense:
-            out = _translate_rows(self.ix, out)
-        return [(r, int(d), float(s)) for r, d, s in out]
+            acc[idx] += idf * a / bt
+        if cand is not None:  # (the union's docs all have a posting)
+            docs, acc = docs[hit], acc[hit]
+        scores = np.round(acc, 6)
+        return [(i + 1, int(docs[j]), float(scores[j]))
+                for i, j in enumerate(_topk_order(docs, scores, k))]
+
+
+def _driver_scorer(ix: IndexReader, terms: list[str], k1: float,
+                   b: float) -> "_BatchScorer":
+    """A scorer over ``terms``' postings from the reader's LRU."""
+    dfs = ix.term_dfs(sorted(set(terms)))
+    return _BatchScorer(ix.decoded_postings(sorted(dfs)), dfs, ix.n_docs,
+                        ix.avgdl, k1, b)
+
+
+def _driver_score(ix: IndexReader, terms: list[str],
+                  cand: np.ndarray | None, k: int, k1: float, b: float,
+                  boosts: dict | None = None,
+                  scorer: "_BatchScorer | None" = None
+                  ) -> list[tuple[int, int, float]]:
+    """Driver BM25 top-k in raw doc ids: ``scorer`` (a batch's shared
+    one) or a fresh one over ``terms``, then the ordinal translation."""
+    if scorer is None:
+        scorer = _driver_scorer(ix, terms, k1, b)
+    return _translate_rows(ix, scorer.score(terms, cand, k, boosts))
 
 
 def _topk_order(docs: np.ndarray, scores: np.ndarray, k: int
@@ -500,9 +566,14 @@ def _topk_order(docs: np.ndarray, scores: np.ndarray, k: int
     strictly-above set (< k rows), and among the threshold ties pick
     the smallest doc_ids by another partition (ties are broken by
     doc ASC, so the k-th score's tie group never needs a full sort —
-    a mass-tie corpus made the lexsort the scoring hot spot)."""
+    a mass-tie corpus made the lexsort the scoring hot spot). Up to a
+    few hundred rows the sort is cheaper than the selection's fixed
+    cost of about ten numpy calls (crossover near 700 rows at k = 10).
+    No rows for k <= 0."""
     m = len(scores)
-    if m <= max(k, 64):
+    if k <= 0:
+        return np.empty(0, dtype=np.intp)
+    if m <= max(k, 512):
         return np.lexsort((docs, -scores))[:k]
     thr = np.partition(scores, m - k)[m - k]
     above = scores > thr
@@ -532,7 +603,7 @@ def _expansion_search(ix: IndexReader, expanded: list[str], k: int,
         from .wand import bm25_indexed
         return [(int(r["rank"]), int(r["doc_id"]), float(r["score"]))
                 for r in bm25_indexed(ix, expanded, k, k1, b).collect()]
-    return _score_candidates(ix, expanded, None, k, k1, b)
+    return _driver_score(ix, expanded, None, k, k1, b)
 
 
 def more_like_this_indexed(ix: IndexReader, doc_id: int, k: int = 10,
@@ -587,18 +658,13 @@ def more_like_this_indexed(ix: IndexReader, doc_id: int, k: int = 10,
         kept = [(int(r["doc_id"]), float(r["score"])) for r in out
                 if int(r["doc_id"]) != int(doc_id)][:int(k)]
         return [(i + 1, d, s) for i, (d, s) in enumerate(kept)]
-    posts = ix.decoded_postings(terms)
-    arrs = [posts[t][0] for t in terms if len(posts[t][0])]
-    if not arrs:
+    # candidates: the union of the terms' postings less the source doc
+    src = _docids_to_postspace(ix, np.asarray([int(doc_id)], np.int64))
+    cand = _candidates(ParsedQuery(), [], 0, _driver_docs(ix), terms,
+                       excluded=[src])
+    if cand is not None and not len(cand):
         return []
-    union = np.unique(np.concatenate(arrs))
-    excl = _docids_to_postspace(
-        ix, np.asarray([int(doc_id)], dtype=np.int64))
-    if len(excl):
-        union = union[~np.isin(union, excl, assume_unique=True)]
-    if not len(union):
-        return []
-    return _score_candidates(ix, terms, union, k, k1, b)
+    return _driver_score(ix, terms, cand, k, k1, b)
 
 
 def prefix_search(ix: IndexReader, prefix: str, k: int = 10,
@@ -772,11 +838,7 @@ def querystring_topk_distributed(ix: IndexReader, qs: str, k: int = 10,
     if scored_src is None:
         return empty
 
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    idf = F.log(F.lit(1.0)
-                + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
+    idf, tf_part = _bm25_columns(ix, k1, b)
     boosts_df = rows_df(spark, sorted(weights.items()),
                         "term string, boost double")
     scored = (scored_src.join(F.broadcast(stats), "term")
@@ -828,9 +890,9 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
     bucket — the only payload that moves is the delta+varint blocks,
     exactly the index-build's membw discipline — the query set rides a
     broadcast, and each bucket task runs the driver path's own
-    posting-set algebra (constrain + sorted-term scoring, the
-    ``_querystring_driver``/``_BatchScorer`` discipline, so scores are
-    float-identical to the fast path) on its doc range in numpy.
+    posting-set algebra and scorer (``_candidates`` and
+    ``_BatchScorer``, so scores are float-identical to the fast path)
+    on its doc range in numpy.
     Per-(query, bucket) top-k lists then merge to exact global
     per-query top-k: every clause is a per-doc predicate and BM25 uses
     global broadcast stats, so restriction to a doc range commutes
@@ -843,44 +905,18 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
     from . import codec
     from .delete import keep_mask
 
-    specs: dict = {}
-    score_union: set = set()
-    other_union: set = set()
+    queries = []
+    terms: set = set()
     for qid, pq in sorted(parsed_sub.items()):
         w = pq.expansion_weights(exp_by_q[qid])
-        msm_clauses = None
-        if min_should_match:
-            if min_should_match > pq.n_should_clauses:
-                continue  # unsatisfiable (Lucene BooleanQuery semantics)
-            msm_clauses = ([(sorted(set(ts)), need)
-                            for ts, need in pq.should_clauses]
-                           + [(sorted(set(ts)), 1) for ts in exp_by_q[qid]])
-        spec = {"weights": dict(w),
-                "must": sorted(set(pq.must)),
-                "groups": [sorted(set(ts)) for ts, _gb in pq.must_any],
-                "must_not": sorted(set(pq.must_not)),
-                "msm": msm_clauses}
-        specs[qid] = spec
-        score_union |= set(w)
-        other_union |= set(spec["must"]) | set(spec["must_not"])
-        for g in spec["groups"]:
-            other_union |= set(g)
-        if msm_clauses:
-            for ts, _need in msm_clauses:
-                other_union |= set(ts)
-    if not specs:
-        return []
-    dfs_all = {t: d for t, d in
-               ix.term_dfs(sorted(score_union | other_union)).items()
-               if d > 0}
-    live_terms = sorted(dfs_all)
-    if not live_terms:
+        queries.append((qid, pq, exp_by_q[qid], w))
+        terms |= set(w) | set(pq.literal_score_terms) | set(pq.must_not)
+    dfs = {t: d for t, d in ix.term_dfs(sorted(terms)).items() if d > 0}
+    if not dfs:
         return []
     n_docs, avgdl = int(ix.n_docs), float(ix.avgdl)
-    idfs = {t: _idf(n_docs, dfs_all[t]) for t in live_terms}
-    score_set = frozenset(score_union) & frozenset(live_terms)
 
-    post = ix.term_postings(live_terms)
+    post = ix.term_postings(sorted(dfs))
     dense = ix.dense
     assert n_buckets >= 2 and n_buckets & (n_buckets - 1) == 0
     shift = 64 - n_buckets.bit_length() + 1
@@ -901,12 +937,13 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
                 .drop("b1", "b2"))
     tombs = ix.tombstones()
     tb = ix.spark.sparkContext.broadcast(tombs) if tombs.size else None
-    sp = ix.spark.sparkContext.broadcast(
-        (sorted(specs.items()), sorted(score_set), idfs))
+    sp = ix.spark.sparkContext.broadcast((queries, dfs))
     u64_max = np.uint64(0xFFFFFFFFFFFFFFFF)
 
     def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        spec_items, score_terms, idfs_b = sp.value
+        # the executor's own scorer, looked up by module name
+        from .serving import _BatchScorer
+        queries_b, dfs_b = sp.value
         if dense:
             bkt = int(pdf["bucket"].iloc[0])
             lo = bkt * span
@@ -920,9 +957,7 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
             hi = codec.from_u64(np.array([hi_u], np.uint64))[0]
         # decode every term's blocks within the range once, shared by
         # all queries (fragments may interleave doc ranges: sort)
-        dset: dict = {}
-        tfs_d: dict = {}
-        dls_d: dict = {}
+        posts: dict = {}
         for t, g in pdf.groupby("term", sort=True):
             parts = []
             for j in range(len(g)):
@@ -932,132 +967,26 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
                     m &= keep_mask(d, tb.value)
                 if m.any():
                     parts.append((d[m], tf[m], dl[m]))
-            if not parts:
-                continue
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
-            dl = np.concatenate([p[2] for p in parts])
-            order = np.argsort(d, kind="mergesort")
-            dset[t] = d[order]
-            tfs_d[t] = tf[order]
-            dls_d[t] = dl[order]
-        s_live = [t for t in score_terms if t in dset]
-        empty = pd.DataFrame({"query_id": pd.Series(dtype="object"),
-                              "doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not s_live:
-            return empty
-        union = np.unique(np.concatenate([dset[t] for t in s_live]))
-        pos: dict = {}
-        A: dict = {}
-        Bv: dict = {}
-        for t in s_live:
-            pos[t] = np.searchsorted(union, dset[t])
-            tff = tfs_d[t].astype(np.float64)
-            dlf = dls_d[t].astype(np.float64)
-            A[t] = tff * (k1 + 1.0)
-            Bv[t] = tff + k1 * (1.0 - b + b * dlf / avgdl)
-        acc = np.zeros(len(union), dtype=np.float64)
-        hit = np.zeros(len(union), dtype=bool)
-        e = np.empty(0, dtype=np.int64)
-        out_q, out_d, out_s = [], [], []
-        for qid, spec in spec_items:
-            cand = None  # None = union of the query's score terms
+            if parts:
+                d, tf, dl = (np.concatenate(c) for c in zip(*parts))
+                order = np.argsort(d, kind="mergesort")
+                posts[t] = (d[order], tf[order], dl[order])
+        scorer = _BatchScorer(posts, dfs_b, n_docs, avgdl, k1, b)
 
-            def constrain(doc_set):
-                nonlocal cand
-                if cand is None:
-                    return np.sort(np.asarray(doc_set, dtype=np.int64))
-                return np.intersect1d(cand, doc_set, assume_unique=True)
+        def docs_of(terms):
+            return [posts[t][0] for t in terms if t in posts]
 
-            dead = False
-            if spec["msm"] is not None:
-                clause_sets = []
-                for ts, need in spec["msm"]:
-                    arrs = [dset[t] for t in ts if t in dset]
-                    if len(arrs) < need:
-                        clause_sets.append(e)
-                        continue
-                    if need == 1:
-                        s = np.unique(np.concatenate(arrs)) if arrs else e
-                    else:
-                        s = arrs[0]
-                        for a in arrs[1:]:
-                            s = np.intersect1d(s, a, assume_unique=True)
-                    clause_sets.append(s)
-                hits = np.concatenate(clause_sets) if clause_sets else e
-                docs_u, counts = np.unique(hits, return_counts=True)
-                ok = docs_u[counts >= min_should_match]
-                if not len(ok):
-                    continue
-                cand = constrain(ok)
-            for t in spec["must"]:
-                d = dset.get(t)
-                if d is None or not len(d):
-                    dead = True
-                    break
-                cand = constrain(d)
-                if not len(cand):
-                    dead = True
-                    break
-            if dead:
-                continue
-            for g in spec["groups"]:
-                arrs = [dset[t] for t in g if t in dset]
-                if not arrs:
-                    dead = True
-                    break
-                cand = constrain(np.unique(np.concatenate(arrs)))
-                if not len(cand):
-                    dead = True
-                    break
-            if dead:
-                continue
-            q_live = [t for t in sorted(spec["weights"]) if t in pos]
-            if spec["must_not"]:
-                excl = [dset[t] for t in spec["must_not"] if t in dset]
-                if excl:
-                    if cand is None:
-                        arrs = [dset[t] for t in q_live]
-                        if not arrs:
-                            continue
-                        cand = np.unique(np.concatenate(arrs))
-                    cand = cand[~np.isin(cand,
-                                         np.unique(np.concatenate(excl)),
-                                         assume_unique=True)]
-                    if not len(cand):
-                        continue
-            if not q_live:
-                continue
-            acc.fill(0.0)
-            hit.fill(False)
-            for t in q_live:
-                idfb = idfs_b[t] * float(spec["weights"].get(t, 1.0))
-                p = pos[t]
-                acc[p] += idfb * A[t] / Bv[t]
-                hit[p] = True
-            if cand is None:
-                sel = hit
-            else:
-                cm = np.zeros(len(union), dtype=bool)
-                cp = np.searchsorted(union, cand)
-                cp_ok = cp < len(union)
-                cp = cp[cp_ok]
-                cm[cp[union[cp] == cand[cp_ok]]] = True
-                sel = hit & cm
-            docs = union[sel]
-            if not len(docs):
-                continue
-            scores = np.round(acc[sel], 6)
-            order = _topk_order(docs, scores, k)
-            out_q += [qid] * len(order)
-            out_d += [int(docs[j]) for j in order]
-            out_s += [float(scores[j]) for j in order]
-        if not out_q:
-            return empty
-        return pd.DataFrame({"query_id": out_q,
-                             "doc_id": pd.array(out_d, dtype="int64"),
-                             "score": pd.array(out_s, dtype="float64")})
+        out = []
+        for qid, pq, exp_lists, w in queries_b:
+            cand = _candidates(pq, exp_lists, min_should_match, docs_of,
+                               sorted(w))
+            if cand is None or len(cand):
+                out += [(qid, d, s) for _r, d, s in
+                        scorer.score(sorted(w), cand, k, w)]
+        return pd.DataFrame({
+            "query_id": pd.Series([q for q, _d, _s in out], dtype="object"),
+            "doc_id": pd.Series([d for _q, d, _s in out], dtype="int64"),
+            "score": pd.Series([s for _q, _d, s in out], dtype="float64")})
 
     local = bucketed.groupBy("bucket").applyInPandas(
         run_bucket, "query_id string, doc_id long, score double")
@@ -1069,12 +998,10 @@ def _bucketed_batch_topk(ix: IndexReader, parsed_sub: dict,
         by_q.setdefault(r.query_id, []).append((r.doc_id, r.score))
     out: list[tuple] = []
     for qid in sorted(by_q):
-        lst = sorted(by_q[qid], key=lambda r: (-r[1], r[0]))[:k]
-        ranked = [(i + 1, int(d), float(s))
-                  for i, (d, s) in enumerate(lst)]
-        if ix.dense:
-            ranked = _translate_rows(ix, ranked)
-        out += [(qid, int(r), int(d), float(s)) for r, d, s in ranked]
+        lst = sorted(by_q[qid], key=lambda r: (-r[1], r[0]))[:max(k, 0)]
+        ranked = _translate_rows(ix, [(i + 1, int(d), float(s))
+                                      for i, (d, s) in enumerate(lst)])
+        out += [(qid, r, d, s) for r, d, s in ranked]
     return out
 
 
@@ -1145,10 +1072,10 @@ def querystring_topk_batch(ix: IndexReader, queries: dict,
         old_budget = ix.POSTINGS_CACHE_MAX_ROWS
         ix.POSTINGS_CACHE_MAX_ROWS = max(old_budget, union_rows + 1)
         try:
-            # one term-pruned read warms the LRU; the shared-term
-            # scorer amortizes per-term position/factor arrays over
-            # every query in the batch
-            bs = _BatchScorer(ix, sorted(dfs), k1, b)
+            # one term-pruned read warms the LRU; the shared scorer
+            # amortizes per-term factor arrays over every query in the
+            # batch
+            bs = _driver_scorer(ix, sorted(dfs), k1, b)
             rows = []
             for qid in sorted(queries):
                 pq = parsed[qid]
@@ -1218,11 +1145,7 @@ def querystring_topk_batch(ix: IndexReader, queries: dict,
     # and apply every constraint to the (query_id, doc_id, score)
     # table, whose right-hand sides are clause-bounded. 2 of 3
     # corpus-sized shuffles gone.
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    idf = F.log(F.lit(1.0)
-                + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
+    idf, tf_part = _bm25_columns(ix, k1, b)
     score_agg = F.round(F.sum(F.col("boost") * idf * tf_part), 6) \
         .alias("score")
     cols = ["query_id", "doc_id", "score"]
@@ -1474,187 +1397,29 @@ def _querystring_driver(ix: IndexReader, pq: ParsedQuery,
     """The driver fast-path body of ``querystring_search_indexed``
     (posting-set algebra on the decoded-postings LRU) — shared verbatim
     by the single-query front door and the batched driver path, so the
-    two can never diverge. ``scorer`` swaps the per-query scoring for
-    the batch's shared-term _BatchScorer (float-identical)."""
-    cand: np.ndarray | None = None  # None = union of score-term postings
-
-    def constrain(doc_set: np.ndarray) -> np.ndarray | None:
-        nonlocal cand
-        if cand is None:
-            return np.sort(np.asarray(doc_set, dtype=np.int64))
-        return np.intersect1d(cand, doc_set, assume_unique=True)
-
-    if min_should_match:
-        if min_should_match > pq.n_should_clauses:
-            return []
-        clause_sets = []
-        for terms, need in (list(pq.should_clauses)
-                            + [(sorted(set(ts)), 1) for ts in exp_lists]):
-            live = sorted(ix.term_dfs(terms))
-            if len(live) < need:
-                clause_sets.append(np.empty(0, dtype=np.int64))
-                continue
-            posts = ix.decoded_postings(live)
-            arrs = [posts[t][0] for t in live]
-            if need == 1:
-                s = (np.unique(np.concatenate(arrs)) if arrs
-                     else np.empty(0, dtype=np.int64))
-            else:  # soft phrase: doc must contain ALL distinct tokens
-                s = arrs[0]
-                for a in arrs[1:]:
-                    s = np.intersect1d(s, a, assume_unique=True)
-            clause_sets.append(s)
-        hit_docs = np.concatenate(clause_sets) if clause_sets else \
-            np.empty(0, dtype=np.int64)
-        docs_u, counts = np.unique(hit_docs, return_counts=True)
-        ok = docs_u[counts >= min_should_match]
-        if not len(ok):
-            return []
-        cand = constrain(ok)
-    if pq.must:
-        musts = sorted(set(pq.must))
-        mdfs = ix.term_dfs(musts)
-        if len(mdfs) < len(musts):
-            return []  # a required term is absent from the corpus
-        posts = ix.decoded_postings(musts)
-        for t in musts:
-            d = posts[t][0]
-            if not len(d):
-                return []
-            cand = constrain(d)
-            if not len(cand):
-                return []
-    for terms, _gb in pq.must_any:
-        live = sorted(ix.term_dfs(sorted(set(terms))))
-        gposts = ix.decoded_postings(live) if live else {}
-        arrs = [gposts[t][0] for t in live if len(gposts[t][0])]
-        if not arrs:
-            return []
-        cand = constrain(np.unique(np.concatenate(arrs)))
-        if not len(cand):
-            return []
-    for ph in pq.phrases:
-        cand = constrain(_phrase_doc_set(ix, ph))
-        if not len(cand):
-            return []
-    for terms, slop in pq.slop_phrases:
-        cand = constrain(_slop_doc_set(ix, terms, slop))
-        if not len(cand):
-            return []
-    if pq.filters:
-        if docs_parquet is None:
-            raise ValueError(
-                "query has field filters; pass docs_parquet (the index "
-                "stores no document metadata)")
-        cand = constrain(_metadata_filter_set(ix, docs_parquet, pq.filters))
-        if not len(cand):
-            return []
-    excl_sets = []
-    if pq.must_not:
-        nots = sorted(set(pq.must_not))
-        nposts = ix.decoded_postings(nots)
-        excl_sets += [nposts[t][0] for t in nots if len(nposts[t][0])]
-    for nph in pq.not_phrases:
-        nset = _phrase_doc_set(ix, nph)
-        if len(nset):
-            excl_sets.append(nset)
-    if excl_sets:
-        excl_set = np.unique(np.concatenate(excl_sets))
-        if cand is None:
-            dfs = ix.term_dfs(score_terms)
-            sposts = ix.decoded_postings(sorted(dfs))
-            arrs = [sposts[t][0] for t in sorted(dfs)
-                    if len(sposts[t][0])]
-            if not arrs:
-                return []
-            cand = np.unique(np.concatenate(arrs))
-        cand = cand[~np.isin(cand, excl_set, assume_unique=True)]
-        if not len(cand):
-            return []
-    if scorer is not None:
-        return scorer.score(score_terms, cand, k, weights)
-    return _score_candidates(ix, score_terms, cand, k, k1, b, weights)
+    two can never diverge. ``scorer`` is the batch's shared one."""
+    cand = _driver_candidates(ix, pq, exp_lists, score_terms, docs_parquet,
+                              min_should_match)
+    if cand is not None and not len(cand):
+        return []
+    return _driver_score(ix, score_terms, cand, k, k1, b, weights, scorer)
 
 
 def _match_set(ix: IndexReader, pq: ParsedQuery, score_terms: list[str],
                exp_lists: list, docs_parquet: str | None,
                min_should_match: int) -> np.ndarray:
     """Posting-space candidate doc set for a parsed query, fully
-    materialized on the driver: union of score-term postings,
-    intersected with every constraint clause. The driver twin of
-    ``_distributed_scored_src`` for the counting/sorting collectors
-    (the scoring path keeps its lazier variant that can skip the
-    union)."""
-    dfs = ix.term_dfs(score_terms)
-    posts = ix.decoded_postings(sorted(dfs))
-    arrs = [posts[t][0] for t in sorted(dfs) if len(posts[t][0])]
+    materialized on the driver: the union of score-term postings
+    narrowed by ``_candidates``. The driver twin of
+    ``_distributed_scored_src`` for the counting/sorting collectors."""
+    arrs = _driver_docs(ix)(score_terms)
     if not arrs:
         return np.empty(0, dtype=np.int64)
-    cand = np.unique(np.concatenate(arrs))
-    if min_should_match:
-        if min_should_match > pq.n_should_clauses:
-            return np.empty(0, dtype=np.int64)
-        clause_sets = []
-        for terms, need in (list(pq.should_clauses)
-                            + [(sorted(set(ts)), 1) for ts in exp_lists]):
-            live = sorted(ix.term_dfs(terms))
-            if len(live) < need:
-                continue
-            cposts = ix.decoded_postings(live)
-            carrs = [cposts[t][0] for t in live]
-            if need == 1:
-                s = (np.unique(np.concatenate(carrs)) if carrs
-                     else np.empty(0, dtype=np.int64))
-            else:
-                s = carrs[0]
-                for a in carrs[1:]:
-                    s = np.intersect1d(s, a, assume_unique=True)
-            clause_sets.append(s)
-        hit = np.concatenate(clause_sets) if clause_sets else \
-            np.empty(0, dtype=np.int64)
-        docs_u, counts = np.unique(hit, return_counts=True)
-        cand = np.intersect1d(cand, docs_u[counts >= min_should_match],
-                              assume_unique=True)
-    if pq.must:
-        musts = sorted(set(pq.must))
-        if len(ix.term_dfs(musts)) < len(musts):
-            return np.empty(0, dtype=np.int64)
-        mposts = ix.decoded_postings(musts)
-        for t in musts:
-            cand = np.intersect1d(cand, mposts[t][0], assume_unique=True)
-    for terms, _gb in pq.must_any:
-        live = sorted(ix.term_dfs(sorted(set(terms))))
-        gposts = ix.decoded_postings(live) if live else {}
-        arrs = [gposts[t][0] for t in live if len(gposts[t][0])]
-        if not arrs:
-            return np.empty(0, dtype=np.int64)
-        cand = np.intersect1d(cand, np.unique(np.concatenate(arrs)),
-                              assume_unique=True)
-    for ph in pq.phrases:
-        cand = np.intersect1d(cand, _phrase_doc_set(ix, ph),
-                              assume_unique=True)
-    for terms, slop in pq.slop_phrases:
-        cand = np.intersect1d(cand, _slop_doc_set(ix, terms, slop),
-                              assume_unique=True)
-    for nph in pq.not_phrases:
-        cand = cand[~np.isin(cand, _phrase_doc_set(ix, nph),
-                             assume_unique=True)]
-    if pq.filters:
-        if docs_parquet is None:
-            raise ValueError(
-                "query has field filters; pass docs_parquet (the index "
-                "stores no document metadata)")
-        cand = np.intersect1d(
-            cand, _metadata_filter_set(ix, docs_parquet, pq.filters),
-            assume_unique=True)
-    if pq.must_not:
-        nots = sorted(set(pq.must_not))
-        nposts = ix.decoded_postings(nots)
-        excl = [nposts[t][0] for t in nots if len(nposts[t][0])]
-        if excl:
-            cand = cand[~np.isin(cand, np.unique(np.concatenate(excl)),
-                                 assume_unique=True)]
-    return cand
+    union = np.unique(np.concatenate(arrs))
+    cand = _driver_candidates(ix, pq, exp_lists, score_terms, docs_parquet,
+                              min_should_match)
+    return union if cand is None else \
+        np.intersect1d(union, cand, assume_unique=True)
 
 
 def querystring_count_indexed(ix: IndexReader, qs: str,

@@ -1,11 +1,18 @@
-"""Query-time BM25 over the compressed index, with Block-Max pruning.
+"""Query-time BM25 over the compressed index: the term-query entry
+points (``search``, ``boolean_search``, ``wand_topk``,
+``bm25_topk_batch``) and the distributed scorers behind them. Every
+path is score-EXACT (identical to the exhaustive DataFrame scorer
+ops/core.bm25_topk — asserted in tests).
 
-Two scorers, both score-EXACT (identical to the exhaustive DataFrame
-scorer ops/core.bm25_topk — asserted in tests):
+- **driver**: a query (or batch) whose posting rows fit the fast-path
+  budget is answered from the reader's decoded-postings LRU by the one
+  numpy scorer, ``serving._BatchScorer``; boolean clauses narrow the
+  candidates through ``serving._candidates`` first.
 
 - ``bm25_indexed``: decode postings of the query terms (doc lengths are
-  embedded in the blocks, so no doc-stats join), pure-DataFrame scoring.
-  Plan: term-pruned parquet scan -> mapInPandas decode -> hash agg on
+  embedded in the blocks, so no doc-stats join), pure-DataFrame scoring
+  with the one Column weight (``ops.core.bm25_exprs``). Plan:
+  term-pruned parquet scan -> mapInPandas decode -> hash agg on
   doc_id -> TakeOrderedAndProject global top-k.
 
 - ``wand_topk``: Block-Max pruned top-k. Query-term blocks are
@@ -42,11 +49,10 @@ from pyspark.sql import functions as F
 
 from . import codec
 from .build import IndexReader
+from ..ops.core import B, K1, bm25_exprs
 from ..rows import rows_df
 from .delete import keep_mask
 
-K1 = 1.2
-B = 0.75
 _EPS = 1e-6  # pruning safety margin vs 6-decimal score rounding
 
 
@@ -54,8 +60,15 @@ def _idf(n: int, df: int) -> float:
     return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
+def _bm25_columns(ix: IndexReader, k1: float, b: float):
+    """(idf, tf_part) Columns over (df, tf, dl), the reader's corpus
+    stats as literals."""
+    return bm25_exprs(F.lit(float(ix.n_docs)), F.lit(float(ix.avgdl)),
+                      k1, b)
+
+
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(max(k, 0))
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return top.withColumn("rank", F.row_number().over(w).cast("int")) \
               .select("rank", "doc_id", "score")
@@ -63,12 +76,12 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
 
 def _translate_rows(ix: IndexReader,
                     out: list[tuple]) -> list[tuple]:
-    """Dense-ordinal indexes: map (rank, ord, score) rows back to raw
-    doc_ids with an array take on the reader's resident docmap
-    (``resolve_ords``). Tie-breaking is unaffected — ordinals are
-    assigned in ascending doc_id order, so (score DESC, ord ASC) ==
+    """Map (rank, ord, score) rows back to raw doc_ids with an array
+    take on a dense index's resident docmap (``resolve_ords``); other
+    indexes' rows pass through. Tie-breaking is unaffected — ordinals
+    are assigned in ascending doc_id order, so (score DESC, ord ASC) ==
     (score DESC, doc_id ASC)."""
-    if not out:
+    if not out or not ix.dense:
         return out
     ids = ix.resolve_ords([d for _r, d, _s in out])
     return [(r, int(i), s) for (r, _d, s), i in zip(out, ids)]
@@ -120,10 +133,7 @@ def bm25_indexed(ix: IndexReader, query_terms: list[str], k: int = 10,
     stats_rows = sorted(ix.term_dfs(terms).items())
     stats = rows_df(ix.spark, stats_rows, "term string, df long")
     tc = decoded_tc(ix, terms)
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    idf = F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
+    idf, tf_part = _bm25_columns(ix, k1, b)
     scored = (tc.join(F.broadcast(stats), "term")
               .groupBy("doc_id")
               .agg(F.round(F.sum(idf * tf_part), 6).alias("score")))
@@ -152,65 +162,22 @@ def _fastpath_bound(ix: IndexReader) -> int:
     return max(DRIVER_FASTPATH_MAX_DF, ix.POSTINGS_CACHE_MAX_ROWS)
 
 
-def _driver_rows(ix: IndexReader, terms: list[str], k: int,
-                 k1: float, b: float) -> list[tuple]:
-    """Driver fast path core: (rank, doc_id, score) tuples.
-
-    Postings come from the reader's decoded-postings LRU
-    (IndexReader.decoded_postings): one term-pruned parquet point read
-    per cache miss, zero reads for a sustained stream's hot terms —
-    tombstones are already applied inside the cache (both are fixed at
-    reader construction)."""
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    dfs = ix.term_dfs(terms)
-    posts = ix.decoded_postings(sorted(dfs))
-    live = [t for t in sorted(dfs) if len(posts[t][0])]
-    if not live:
-        return []
-    docs = np.unique(np.concatenate([posts[t][0] for t in live]))
-    acc = np.zeros(len(docs), dtype=np.float64)
-    for t in live:  # fixed summation order (SURVEY §7.3): per doc the
-        # contributions add in sorted-term order, the same pairwise FP
-        # sequence as the previous Series.add chain
-        idf = _idf(int(n), dfs[t])
-        d, tf, dl = posts[t]
-        tff = tf.astype(np.float64)
-        dlf = dl.astype(np.float64)
-        c = idf * (tff * (k1 + 1.0)) / \
-            (tff + k1 * (1.0 - b + b * dlf / avgdl))
-        acc[np.searchsorted(docs, d)] += c
-    scores = np.round(acc, 6)
-    order = np.lexsort((docs, -scores))[:k]
-    out = [(i + 1, int(docs[j]), float(scores[j]))
-           for i, j in enumerate(order)]
-    if ix.dense:
-        out = _translate_rows(ix, out)
-    return out
-
-
-def _driver_topk(ix: IndexReader, terms: list[str], k: int,
-                 k1: float, b: float) -> DataFrame:
-    out = _driver_rows(ix, terms, k, k1, b)
-    return rows_df(ix.spark, out or [],
-                   "rank int, doc_id long, score double")
-
-
 def search(ix: IndexReader, query_terms: list[str], k: int = 10,
            k1: float = K1, b: float = B) -> list[tuple[int, int, float]]:
     """Serving-native top-k: plain (rank, doc_id, score) tuples with NO
     DataFrame round-trip. Dictionary-bounded queries score entirely on
-    the driver (term-pruned parquet point read + numpy — the
-    coordinator short-query path); hot queries fall back to the
+    the driver (term-pruned parquet point read + the numpy scorer —
+    the coordinator short-query path); hot queries fall back to the
     distributed block-max scorer and collect its <= k rows. Identical
     scores/tie-breaking to wand_topk (shared implementation) — this is
     the sustained-QPS serving surface, wand_topk the DataFrame one."""
+    from .serving import _driver_score  # lazy: serving imports wand
     terms = sorted(set(query_terms))
     term_df = ix.term_dfs(terms)
     if not term_df:
         return []
     if sum(term_df.values()) <= _fastpath_bound(ix):
-        rows = _driver_rows(ix, sorted(term_df), k, k1, b)
-        return [(r, int(d), float(s)) for r, d, s in rows]
+        return _driver_score(ix, sorted(term_df), None, k, k1, b)
     df = wand_topk(ix, query_terms, k, k1, b, driver_fastpath=False)
     return [(int(r["rank"]), int(r["doc_id"]), float(r["score"]))
             for r in df.collect()]
@@ -226,12 +193,14 @@ def boolean_search(ix: IndexReader, must: list[str],
 
     Driver-native serving path: clause postings come from the reader's
     decoded-postings LRU, the must-intersection / must_not-difference
-    are sorted-array set ops, and only surviving docs are scored. All
-    clause lists are dictionary-bounded (a handful of terms), so like
-    ``search()`` this is coordinator work; an index-side distributed
-    variant would follow wand_topk's bucket shape if clause posting
-    lists ever exceed driver memory."""
-    import numpy as np
+    is the query-string driver's own algebra (``serving._candidates``),
+    and only surviving docs are scored. All clause lists are
+    dictionary-bounded (a handful of terms), so like ``search()`` this
+    is coordinator work; an index-side distributed variant would follow
+    wand_topk's bucket shape if clause posting lists ever exceed driver
+    memory."""
+    from ..ops.querylang import ParsedQuery
+    from .serving import _candidates, _driver_docs, _driver_score
     should = should or []
     must_not = must_not or []
     if not must:
@@ -239,51 +208,12 @@ def boolean_search(ix: IndexReader, must: list[str],
     overlap = set(must + should) & set(must_not)
     if overlap:
         raise ValueError(f"terms both required and excluded: {overlap}")
-    must_u = sorted(set(must))
-    dfs_must = ix.term_dfs(must_u)
-    if len(dfs_must) < len(must_u):
-        return []  # a must term is absent from the corpus
     score_terms = sorted(ix.term_dfs(list(dict.fromkeys(must + should))))
-    posts = ix.decoded_postings(
-        sorted(set(score_terms) | set(must_u) | set(must_not)))
-    cand = None
-    for t in must_u:
-        d = posts[t][0]
-        cand = d if cand is None else np.intersect1d(cand, d,
-                                                     assume_unique=True)
-        if not len(cand):
-            return []
-    for t in sorted(set(must_not)):
-        if t in posts and len(posts[t][0]):
-            cand = cand[~np.isin(cand, posts[t][0], assume_unique=True)]
+    pq = ParsedQuery(must=sorted(set(must)), must_not=sorted(set(must_not)))
+    cand = _candidates(pq, [], 0, _driver_docs(ix), score_terms)
     if not len(cand):
         return []
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    dfs = ix.term_dfs(score_terms)
-    cand = np.sort(cand)
-    hit = np.zeros(len(cand), dtype=bool)
-    acc = np.zeros(len(cand), dtype=np.float64)
-    for t in score_terms:  # fixed summation order, as _driver_rows
-        d, tf, dl = posts[t]
-        m = np.isin(d, cand, assume_unique=True)
-        if not m.any():
-            continue
-        idf = _idf(int(n), dfs[t])
-        tff = tf[m].astype(np.float64)
-        dlf = dl[m].astype(np.float64)
-        c = idf * (tff * (k1 + 1.0)) / \
-            (tff + k1 * (1.0 - b + b * dlf / avgdl))
-        idx = np.searchsorted(cand, d[m])
-        acc[idx] += c
-        hit[idx] = True
-    docs = cand[hit]
-    scores = np.round(acc[hit], 6)
-    order = np.lexsort((docs, -scores))[:k]
-    out = [(i + 1, int(docs[j]), float(scores[j]))
-           for i, j in enumerate(order)]
-    if ix.dense:
-        out = _translate_rows(ix, out)
-    return [(r, int(d), float(s)) for r, d, s in out]
+    return _driver_score(ix, score_terms, cand, k, k1, b)
 
 
 def wand_topk(ix: IndexReader, query_terms: list[str], k: int = 10,
@@ -301,11 +231,11 @@ def wand_topk(ix: IndexReader, query_terms: list[str], k: int = 10,
     # pruned dictionary read: only the query's terms, LRU-cached — no
     # full-vocab structure ever lands on the driver
     term_df = ix.term_dfs(terms)
-    if not term_df:
-        return _rank_topk(
-            rows_df(ix.spark, [], "doc_id long, score double"), k)
+    if not term_df or k <= 0:
+        return rows_df(ix.spark, [], "rank int, doc_id long, score double")
     if driver_fastpath and sum(term_df.values()) <= _fastpath_bound(ix):
-        return _driver_topk(ix, sorted(term_df), k, k1, b)
+        return rows_df(ix.spark, search(ix, terms, k, k1, b),
+                       "rank int, doc_id long, score double")
     n_docs, avgdl = int(ix.n_docs), float(ix.avgdl)
 
     dense = ix.dense
@@ -440,12 +370,9 @@ def wand_topk(ix: IndexReader, query_terms: list[str], k: int = 10,
     # an extra global sort + window stage
     rows = local.collect()
     rows.sort(key=lambda r: (-r.score, r.doc_id))
-    out = [(i + 1, int(r.doc_id), float(r.score))
-           for i, r in enumerate(rows[:k])]
-    if ix.dense:
-        out = _translate_rows(ix, out)
-    return rows_df(ix.spark, out or [],
-                   "rank int, doc_id long, score double")
+    out = _translate_rows(ix, [(i + 1, int(r.doc_id), float(r.score))
+                               for i, r in enumerate(rows[:k])])
+    return rows_df(ix.spark, out, "rank int, doc_id long, score double")
 
 
 def bm25_topk_batch(ix: IndexReader, queries: dict[str, list[str]],
@@ -477,28 +404,23 @@ def bm25_topk_batch(ix: IndexReader, queries: dict[str, list[str]],
     # batch driver fast path (the serving batch's routing rule): when
     # the union of all queries' posting rows fits the driver budget,
     # ONE term-pruned decode warms the LRU and every query is answered
-    # by the shared `_driver_rows` body (identical scores/tie-breaks to
+    # by the one numpy scorer (identical scores/tie-breaks to
     # the distributed plan — parity-tested); 21–200 coordinated
     # queries then cost milliseconds each instead of fanning
     # queries x postings through a shuffle. Past the budget the
     # distributed plan below is the honest shape.
     from .serving import (BATCH_DRIVER_MAX_WORK,  # lazy: serving imports wand
-                          _BatchScorer)
+                          _driver_score, _driver_scorer)
     if (sum(dfs.values()) <= _fastpath_bound(ix)
             and len(queries) * min(sum(dfs.values()), int(ix.n_docs))
             <= BATCH_DRIVER_MAX_WORK):
         old_budget = ix.POSTINGS_CACHE_MAX_ROWS
         ix.POSTINGS_CACHE_MAX_ROWS = max(old_budget, sum(dfs.values()) + 1)
         try:
-            bs = _BatchScorer(ix, sorted(dfs), k1, b)
-            rows = []
-            for qid in sorted(queries):
-                qt = sorted({t for t in set(queries[qid]) if t in dfs})
-                if not qt:
-                    continue
-                out = bs.score(qt, None, k)
-                rows += [(qid, int(r), int(d), float(s))
-                         for r, d, s in out]
+            bs = _driver_scorer(ix, sorted(dfs), k1, b)
+            rows = [(qid, r, d, s) for qid in sorted(queries)
+                    for r, d, s in _driver_score(ix, queries[qid], None, k,
+                                                 k1, b, scorer=bs)]
         finally:
             ix.POSTINGS_CACHE_MAX_ROWS = old_budget
         return rows_df(
@@ -508,34 +430,8 @@ def bm25_topk_batch(ix: IndexReader, queries: dict[str, list[str]],
                              "query_id string, term string"))
     stats = F.broadcast(rows_df(ix.spark, sorted(dfs.items()),
                                 "term string, df long"))
-    post = ix.term_postings(sorted(dfs))
-
-    tomb = ix.tombstones()
-    tb2 = ix.spark.sparkContext.broadcast(tomb) if tomb.size else None
-
-    def _decode(pdf_iter):
-        t = tb2.value if tb2 is not None else None
-        for pdf in pdf_iter:
-            frames = []
-            for _, r in pdf.iterrows():
-                docs, tfs, dls = codec.decode_blocks(r["blocks"])
-                if t is not None:
-                    m = keep_mask(docs, t)
-                    docs, tfs, dls = docs[m], tfs[m], dls[m]
-                frames.append(pd.DataFrame(
-                    {"term": r["term"], "doc_id": docs,
-                     "tf": tfs, "dl": dls}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    tc = post.select("term", "blocks").mapInPandas(
-        _decode, "term string, doc_id long, tf long, dl long")
-    n, avgdl = float(ix.n_docs), float(ix.avgdl)
-    idf = F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    scored = (tc.join(stats, "term").join(qt, "term")
+    idf, tf_part = _bm25_columns(ix, k1, b)
+    scored = (decoded_tc(ix, sorted(dfs)).join(stats, "term").join(qt, "term")
               .groupBy("query_id", "doc_id")
               .agg(F.round(F.sum(idf * tf_part), 6).alias("score")))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 
 from ..tokenizer import duckdb_toks_cte, sql_str_list, tokens_exploded
 from ..rows import rows_df
-from .core import B, K1, corpus_tokens
+from .core import B, K1, bm25_exprs, corpus_tokens
 
 
 def boolean_bm25_topk(docs: DataFrame, must: list[str],
@@ -73,10 +73,7 @@ def boolean_bm25_topk(docs: DataFrame, must: list[str],
     dl = corpus_doc_lengths(toks)
     g = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
     stats_q = tc_q.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log(F.lit(1.0)
-                + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+    idf, tf_part = bm25_exprs(F.col("n"), F.col("avgdl"), k1, b)
     scored = (tc_q.join(cand, "doc_id")
               .join(F.broadcast(stats_q), "term")
               .join(dl, "doc_id")

@@ -14,7 +14,7 @@ are engine-independent (SURVEY §7.3 deterministic tie-breaks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..tokenizer import duckdb_toks_cte, tokens_exploded
@@ -51,13 +51,14 @@ def term_stats(docs: DataFrame) -> DataFrame:
             .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
 
 
-def bm25_exprs(k1: float = K1, b: float = B):
-    """(idf, tf_part) column expressions over (n, df, tf, dl, avgdl) —
-    THE scoring math, shared by the kernel and the explain surface."""
-    idf = F.log(F.lit(1.0)
-                + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+def bm25_exprs(n: Column, avgdl: Column, k1: float = K1, b: float = B):
+    """(idf, tf_part) column expressions over (df, tf, dl) and the
+    corpus stats ``n`` and ``avgdl`` — columns (``F.col``) or literals
+    (``F.lit``). THE Spark scoring math, shared by every corpus and
+    index Column scorer and the explain surface."""
+    idf = F.log(F.lit(1.0) + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_part = (F.col("tf") * (k1 + 1.0)) / \
-        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+        (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
     return idf, tf_part
 
 
@@ -138,7 +139,7 @@ def bm25_rank_over(docs: DataFrame, qdf: DataFrame, k: int = 10,
     g = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
     stats_q = tc_q.groupBy("term").agg(F.count("*").alias("df"))
     scored_src = tc_q if constrain is None else constrain(tc_q)
-    idf, tf_part = bm25_exprs(k1, b)
+    idf, tf_part = bm25_exprs(F.col("n"), F.col("avgdl"), k1, b)
     contrib = idf * tf_part
     if "boost" in qdf.columns:
         scored_src = scored_src.join(

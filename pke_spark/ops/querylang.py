@@ -731,7 +731,7 @@ def querystring_explain(docs: DataFrame, qs: str, k: int = 10,
     dl = corpus_doc_lengths(toks)
     g = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl"))
     stats_q = tc_q.groupBy("term").agg(F.count("*").alias("df"))
-    idf, tf_part = bm25_exprs(k1, b)
+    idf, tf_part = bm25_exprs(F.col("n"), F.col("avgdl"), k1, b)
     return (tc_q.join(F.broadcast(top), "doc_id", "left_semi")
             .join(F.broadcast(stats_q), "term")
             .join(dl, "doc_id")

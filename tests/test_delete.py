@@ -320,3 +320,24 @@ def test_expansion_df_semantics_with_tombstones(spark, tmp_path):
     purge_deleted(spark, d)
     ix3 = IndexReader(spark, d)
     assert SV.expand_prefix_indexed(ix3, "a", 2) == live
+
+
+@pytest.mark.parametrize("dense", [False, True], ids=["sparse", "dense"])
+def test_fresh_rebuild_drops_the_old_corpus_tombstones(spark, tmp_path,
+                                                       dense):
+    """Tombstones name docs of the corpus they were written against (by
+    ordinal on a dense index). A fresh build over the same dir replaces
+    that corpus, so it must drop them: left behind, the old deletes
+    hide the new docs at ordinals (or ids) 0, 1, 2."""
+    d = str(tmp_path / "ix")
+    old = spark.createDataFrame([(i, f"old words {i}") for i in range(40)],
+                                "doc_id long, text string")
+    build_index(old, d, n_parts=2, n_salts=2, dense_doc_ids=dense)
+    assert delete_docs(spark, d, [0, 1, 2]) == 3
+    new = spark.createDataFrame(
+        [(i, f"fresh common words {i}") for i in range(40)],
+        "doc_id long, text string")
+    build_index(new, d, n_parts=2, n_salts=2, dense_doc_ids=dense)
+    ix = IndexReader(spark, d)
+    assert ix.tombstones().size == 0
+    assert len(search(ix, ["common"], 100)) == 40

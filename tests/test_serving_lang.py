@@ -523,13 +523,22 @@ def test_hot_negated_phrase_routes_distributed(sf_ix, monkeypatch):
     assert SV._route_distributed(sf_ix, pq_slop, ["spark"], None)
 
 
+def _batch_rows(df) -> dict:
+    by_q: dict = {}
+    for r in df.collect():
+        by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
+    return {q: sorted(rows) for q, rows in by_q.items()}
+
+
 def test_batch_distributed_mixed_parity(spark, tmp_path, monkeypatch):
-    """Distributed batched plan on a batch mixing unconstrained,
-    boosted, mass-tie, +must / -not constrained, and sub-k queries
-    over a corpus where most queries match far more than k docs —
-    per-query rows must equal the sequential serving path exactly,
-    tie-breaks included. Forced past the driver budget so the
-    distributed score-once-then-constrain plan is what runs."""
+    """Both batch routes on a batch mixing unconstrained, boosted,
+    mass-tie, +must / -not constrained, group and sub-k queries over a
+    corpus where most queries match far more than k docs — per-query
+    rows must equal the sequential serving path exactly, tie-breaks
+    included, with and without min_should_match, on a raw-id and a
+    dense-ordinal index (the driver and every bucket task share one
+    candidate algebra and one scorer). The distributed run is forced
+    past the driver budget."""
     from pke_spark.index import serving as SVm
     from pke_spark.index.build import build_index
     from pke_spark.index.positions import build_positions
@@ -541,35 +550,47 @@ def test_batch_distributed_mixed_parity(spark, tmp_path, monkeypatch):
               + f"uniq{i}"))
             for i in range(400)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = str(tmp_path / "ix")
-    build_index(docs, d, n_parts=4, n_salts=2)
-    build_positions(docs, d, n_salts=2)
-    ix = IndexReader(spark, d)
-
     qset = {
         "plain": "alpha gamma",            # unconstrained
         "boost": "alpha^2 beta delta^0.5",  # boosts thread through
         "tie": "alpha beta",               # mass ties -> doc_id breaks
         "must": "+delta alpha",            # MUST constraint
         "notq": "alpha -epsilon",          # MUST_NOT constraint
+        "group": "(beta gamma) epsilon^0.5",  # SHOULD group
+        "mgroup": "+(gamma epsilon) alpha",  # required group
         "rare": "uniq7 uniq9",             # fewer matches than k
     }
-    monkeypatch.setattr(SVm, "BATCH_DRIVER_MAX_ROWS", 0)
-    got = SVm.querystring_topk_batch(ix, qset, 10).collect()
-    by_q: dict = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(
-            (r.rank, r.doc_id, r.score))
-    for qid, qs in qset.items():
-        want = SVm.querystring_search_indexed(ix, qs, 10)
-        assert sorted(by_q.get(qid, [])) == sorted(want), qid
-    assert len(by_q["plain"]) == 10  # matches >> k, top-k returned
+    for dense in (False, True):
+        d = str(tmp_path / f"ix_{dense}")
+        build_index(docs, d, n_parts=4, n_salts=2, dense_doc_ids=dense)
+        build_positions(docs, d, n_salts=2)
+        ix = IndexReader(spark, d)
+        for msm in (0, 2):
+            want = {qid: sorted(SVm.querystring_search_indexed(
+                        ix, qs, 10, min_should_match=msm))
+                    for qid, qs in qset.items()}
+            want = {qid: rows for qid, rows in want.items() if rows}
+            driver = _batch_rows(SVm.querystring_topk_batch(
+                ix, qset, 10, min_should_match=msm))
+            with monkeypatch.context() as m:
+                m.setattr(SVm, "BATCH_DRIVER_MAX_ROWS", 0)
+                dist = _batch_rows(SVm.querystring_topk_batch(
+                    ix, qset, 10, min_should_match=msm))
+            assert driver == want, (dense, msm)
+            assert dist == want, (dense, msm)
+            if not msm:
+                assert len(want["plain"]) == 10  # matches >> k
+            else:
+                assert want and "must" not in want  # 1 SHOULD clause
 
 
 def test_batch_routes_and_both_paths_agree(spark, tmp_path, monkeypatch):
     """The batch routes by the UNION working set: under the budget it
     answers driver-side (shared _querystring_driver body), over it the
-    distributed score-once plan runs — both must be row-identical."""
+    distributed plans run (bucketed for term algebra, fanned for the
+    phrase query) — both must be row-identical to the single-query
+    path, with and without min_should_match, on a raw-id and a
+    dense-ordinal index."""
     from pke_spark.index import serving as SVm
     from pke_spark.index.build import build_index
     from pke_spark.index.positions import build_positions
@@ -578,21 +599,27 @@ def test_batch_routes_and_both_paths_agree(spark, tmp_path, monkeypatch):
              + "merge slow " * (i % 3))
             for i in range(120)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = str(tmp_path / "ix")
-    build_index(docs, d, n_parts=2, n_salts=2)
-    build_positions(docs, d, n_salts=2)
-    ix = IndexReader(spark, d)
     qset = {"a": "alpha gamma", "b": "+alpha^2 beta -gamma",
-            "c": 'alpha "merge slow"', "d": "(beta gamma) alpha^0.5"}
-
-    def rows_of(df):
-        return sorted((r.query_id, r.rank, r.doc_id, r.score)
-                      for r in df.collect())
-
-    driver = rows_of(SVm.querystring_topk_batch(ix, qset, 10))
-    monkeypatch.setattr(SVm, "BATCH_DRIVER_MAX_ROWS", 0)
-    dist = rows_of(SVm.querystring_topk_batch(ix, qset, 10))
-    assert driver == dist and len(driver) >= 30
+            "c": 'alpha "merge slow"', "d": "(beta gamma) alpha^0.5",
+            "e": "(beta gamma) merge"}
+    for dense in (False, True):
+        d = str(tmp_path / f"ix_{dense}")
+        build_index(docs, d, n_parts=2, n_salts=2, dense_doc_ids=dense)
+        build_positions(docs, d, n_salts=2)
+        ix = IndexReader(spark, d)
+        for msm in (0, 2):
+            want = {qid: sorted(SVm.querystring_search_indexed(
+                        ix, qs, 10, min_should_match=msm))
+                    for qid, qs in qset.items()}
+            want = {qid: rows for qid, rows in want.items() if rows}
+            driver = _batch_rows(SVm.querystring_topk_batch(
+                ix, qset, 10, min_should_match=msm))
+            with monkeypatch.context() as m:
+                m.setattr(SVm, "BATCH_DRIVER_MAX_ROWS", 0)
+                dist = _batch_rows(SVm.querystring_topk_batch(
+                    ix, qset, 10, min_should_match=msm))
+            assert driver == want == dist, (dense, msm)
+            assert sum(map(len, want.values())) >= (30 if not msm else 10)
 
 
 def test_docset_cache_memoizes_and_evicts(fx_ix):
